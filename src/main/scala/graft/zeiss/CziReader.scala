@@ -3,7 +3,7 @@ package graft.zeiss
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 
 /** Minimal ZISRAW (Zeiss CZI) container reader — closes the "real CZI
   * source" gap of SURVEY §2A op 5 for the common uncompressed case. The
@@ -335,16 +335,37 @@ object CziReader {
       case _ => None
     }
 
+  /** Opens `path` for the positional reads of [[rows]]; the caller closes
+    * it. One stream serves every subblock a task reads. */
+  def openStream(conf: Configuration, path: String): FSDataInputStream = {
+    val p = new Path(path)
+    p.getFileSystem(conf).open(p)
+  }
+
   /** Reads one subblock's pixel payload, decoded to raw little-endian
     * C-order bytes over the entry's dimension extents (X fastest). */
   def payload(conf: Configuration, path: String, e: SubblockEntry): Array[Byte] = {
-    val (id, _, data) = segmentHeader(conf, path, e.filePosition)
+    val in = openStream(conf, path)
+    try rows(in, e, 0, e.size("Z"), 0, e.size("Y")) finally in.close()
+  }
+
+  /** Subblock `e`'s pixels over its Z planes [z0, z1) and rows [y0, y1)
+    * (entry-relative, full X width), decoded to raw little-endian C-order
+    * bytes. An uncompressed payload is read only over those rows, one
+    * positional read per Z plane; a zstd payload is decoded whole, then
+    * cut. */
+  def rows(in: FSDataInputStream, e: SubblockEntry,
+      z0: Int, z1: Int, y0: Int, y1: Int): Array[Byte] = {
+    // segment header (32) + subblock fixed part (16) in one read
+    val head = new Array[Byte](48)
+    in.readFully(e.filePosition, head)
+    val id = new String(head, 0, 16, "US-ASCII").takeWhile(_ != '\u0000').trim
     require(id == "ZISRAWSUBBLOCK", s"expected subblock segment, got '$id'")
-    val fixed = le(readAt(conf, path, data, 16))
-    val metadataSize = fixed.getInt(0)
-    val dataSize = fixed.getLong(8)
+    val fixed = le(head)
+    val metadataSize = fixed.getInt(32)
+    val dataSize = fixed.getLong(40)
     val entrySize = 32 + 20 * e.dims.size
-    val dataOff = math.max(256, 16 + entrySize) + metadataSize
+    val dataOff = e.filePosition + 32 + math.max(256, 16 + entrySize) + metadataSize
     val itemSize = pixelDtype(e.pixelType).map(_.itemSize).getOrElse(
       throw new IllegalArgumentException(s"pixel type ${e.pixelType}"))
     val rawSize = e.dims.map(_.size.toLong).product * itemSize
@@ -352,49 +373,72 @@ object CziReader {
       s"implausible subblock extent ($rawSize raw bytes)")
     require(dataSize > 0 && dataSize <= Int.MaxValue - 8,
       s"implausible dataSize $dataSize")
-    val stored = readAt(conf, path, data + dataOff, dataSize.toInt)
-    def checkedDecompress(frame: Array[Byte]): Array[Byte] = {
-      // zstd-jni returns a TRUNCATED array when the frame decodes to fewer
-      // bytes than requested — a corrupt frame must fail here, not as an
-      // opaque index error later in CziSource.splitBox
-      val decoded = com.github.luben.zstd.Zstd.decompress(frame, rawSize.toInt)
-      require(decoded.length == rawSize,
-        s"zstd frame decoded to ${decoded.length} bytes, extents say $rawSize")
-      decoded
-    }
+    val (ey, rowBytes) = (e.size("Y"), e.size("X") * itemSize)
+    val cutBytes = (y1 - y0) * rowBytes
     e.compression match {
       case CompressionNone =>
         // a corrupt dataSize must fail loudly, not hand the grid a
         // wrong-sized voxel box
-        require(stored.length == rawSize,
-          s"uncompressed payload ${stored.length} bytes, extents say $rawSize")
-        stored
-      case CompressionZstd0 =>
-        checkedDecompress(stored)
-      case CompressionZstd1 =>
-        val hdrSize = stored(0) & 0xff
-        require(hdrSize >= 1 && hdrSize <= stored.length,
-          s"implausible zstd1 header size $hdrSize")
-        val hiLo = hdrSize >= 3 && {
-          require(stored(1) == 1, s"unknown zstd1 chunk id ${stored(1)}")
-          (stored(2) & 1) == 1
+        require(dataSize == rawSize,
+          s"uncompressed payload $dataSize bytes, extents say $rawSize")
+        val out = new Array[Byte]((z1 - z0) * cutBytes)
+        var z = z0
+        while (z < z1) {
+          in.readFully(dataOff + (z.toLong * ey + y0) * rowBytes,
+            out, (z - z0) * cutBytes, cutBytes)
+          z += 1
         }
-        val decoded = checkedDecompress(
-          java.util.Arrays.copyOfRange(stored, hdrSize, stored.length))
-        if (hiLo && itemSize == 2) {
-          // planar low-byte/high-byte halves -> interleaved uint16 LE
-          val n = decoded.length / 2
-          val out = new Array[Byte](decoded.length)
-          var i = 0
-          while (i < n) {
-            out(2 * i) = decoded(i)
-            out(2 * i + 1) = decoded(n + i)
-            i += 1
-          }
+        out
+      case CompressionZstd0 | CompressionZstd1 =>
+        val stored = new Array[Byte](dataSize.toInt)
+        in.readFully(dataOff, stored)
+        val whole = decodeZstd(stored, e.compression, rawSize.toInt, itemSize)
+        if (z0 == 0 && z1 == e.size("Z") && y0 == 0 && y1 == ey) whole
+        else {
+          val out = new Array[Byte]((z1 - z0) * cutBytes)
+          (z0 until z1).foreach(z => System.arraycopy(whole,
+            (z * ey + y0) * rowBytes, out, (z - z0) * cutBytes, cutBytes))
           out
-        } else decoded
+        }
       case other =>
         throw new IllegalArgumentException(s"unsupported compression $other")
+    }
+  }
+
+  private def decodeZstd(stored: Array[Byte], compression: Int,
+      rawSize: Int, itemSize: Int): Array[Byte] = {
+    def checkedDecompress(frame: Array[Byte]): Array[Byte] = {
+      // zstd-jni returns a TRUNCATED array when the frame decodes to fewer
+      // bytes than requested — a corrupt frame must fail here, not as an
+      // opaque index error later in CziSource's chunk assembly
+      val decoded = com.github.luben.zstd.Zstd.decompress(frame, rawSize)
+      require(decoded.length == rawSize,
+        s"zstd frame decoded to ${decoded.length} bytes, extents say $rawSize")
+      decoded
+    }
+    if (compression == CompressionZstd0) checkedDecompress(stored)
+    else {
+      val hdrSize = stored(0) & 0xff
+      require(hdrSize >= 1 && hdrSize <= stored.length,
+        s"implausible zstd1 header size $hdrSize")
+      val hiLo = hdrSize >= 3 && {
+        require(stored(1) == 1, s"unknown zstd1 chunk id ${stored(1)}")
+        (stored(2) & 1) == 1
+      }
+      val decoded = checkedDecompress(
+        java.util.Arrays.copyOfRange(stored, hdrSize, stored.length))
+      if (hiLo && itemSize == 2) {
+        // planar low-byte/high-byte halves -> interleaved uint16 LE
+        val n = decoded.length / 2
+        val out = new Array[Byte](decoded.length)
+        var i = 0
+        while (i < n) {
+          out(2 * i) = decoded(i)
+          out(2 * i + 1) = decoded(n + i)
+          i += 1
+        }
+        out
+      } else decoded
     }
   }
 }

@@ -10,10 +10,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * Because the write chunk (128^3 default) is an exact multiple of the scale
   * factor (2^3 default), every downsample window lies entirely inside one
   * chunk, so the reduction is a pure per-chunk map — ZERO shuffle. The only
-  * shuffle in the level loop is the follow-up rechunk from the shrunken grid
-  * (64^3) back to the write chunk (128^3), which moves each level's bytes
-  * once (level i+1 is 8x smaller, so the total over all levels is a
-  * geometric series ~1.14x of level 1).
+  * shuffle in the level chain is the follow-up rechunk from the shrunken
+  * grid (64^3) back to the write chunk (128^3), which moves each level's
+  * bytes once (level i+1 is 8x smaller, so the total over all levels is a
+  * geometric series ~1.14x of level 1). That shuffle is also the level
+  * boundary: `ZeissJob.writeStack` feeds each level straight from the
+  * previous level's in-memory chunks, one stage per level.
   *
   * Edge windows (array bound not divisible by the factor) average over the
   * voxels actually present, matching the ceil-division shape rule

@@ -2,9 +2,10 @@ package graft.zeiss
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** The chunk-grid rechunk — the reference's `image_data.rechunk(...)`
-  * (`compress/czi_to_zarr.py:447`) and the one true shuffle of the pipeline
-  * (SURVEY.md §2A op 13).
+/** The chunk-grid rechunk (SURVEY.md §2A op 13) — the one shuffle of the
+  * pipeline, run once per pyramid level. The reference's first rechunk, of
+  * the loaded stack (`compress/czi_to_zarr.py:447`), needs none here:
+  * [[CziSource]] assembles write-grid chunks where it reads them.
   *
   * Each source chunk is split into the fragments that fall into target-grid
   * chunks (narrow, local), fragments are shuffled BY TARGET CHUNK KEY, and

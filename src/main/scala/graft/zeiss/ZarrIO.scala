@@ -3,8 +3,9 @@ package graft.zeiss
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.util.{AccumulatorV2, SerializableConfiguration}
 
 /** Zarr v2 store read/write (SURVEY §2A ops 17-19): JSON sidecars
   * (`.zgroup` / `.zarray` / `.zattrs`) plus one Blosc-compressed file per
@@ -16,8 +17,8 @@ import org.apache.spark.util.SerializableConfiguration
   * `aws s3 sync` subprocess sink (`utils/utils.py:138-201`) with the S3A
   * committer, per SURVEY §2A op 24.
   *
-  * Chunk writes happen in `foreachPartition` on the executors; only the
-  * metadata sidecars are driver-side. Region-disjointness makes chunk writes
+  * Chunk writes happen in tasks on the executors; only the metadata
+  * sidecars are driver-side. Region-disjointness makes chunk writes
   * lock-free (one file per chunk — the same property the reference exploits
   * with `lock=False`, `zarr_writer.py:209`).
   */
@@ -110,11 +111,16 @@ object ZarrIO {
       out
     }
 
-  /** Writes one pyramid level: driver writes `.zarray`, executors write the
-    * chunk files. Returns the chunk count (action — this IS the level
-    * barrier's first half). */
-  def writeLevel(spark: SparkSession, ds: Dataset[ImageChunk], grid: ChunkGrid,
-      groupDir: String, level: Int, settings: ZeissJobSettings): Long = {
+  /** Writes one pyramid level as it streams past: the driver writes
+    * `.zarray` now, and each task Blosc-compresses and writes every chunk,
+    * then passes it on unchanged, so the next level is computed in the
+    * same job from the chunks still in memory. Lazy: the files appear when
+    * an action downstream runs. Each task reports its chunk count to
+    * `counts` under (level, partition). */
+  def writeThrough(spark: SparkSession, ds: Dataset[ImageChunk], grid: ChunkGrid,
+      groupDir: String, level: Int, settings: ZeissJobSettings,
+      counts: LevelCounts): Dataset[ImageChunk] = {
+    import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     val levelDir = s"$groupDir/$level"
     writeString(conf, s"$levelDir/.zarray", zarrayJson(grid, settings))
@@ -123,11 +129,11 @@ object ZarrIO {
     val (clevel, doShuffle, compress) =
       (settings.compressorClevel, settings.compressorShuffle, settings.compressionEnabled)
     val g = grid
-    val counter = spark.sparkContext.longAccumulator(s"zarr-chunks-l$level")
-    ds.foreachPartition { (it: Iterator[ImageChunk]) =>
+    ds.mapPartitions { (it: Iterator[ImageChunk]) =>
       val c = sconf.value
       val Seq(cz, cy, cx) = g.chunk
-      it.foreach { chunk =>
+      var n = 0L
+      it.map { chunk =>
         val (ez, ey, ex) = g.extent(chunk.zi, chunk.yi, chunk.xi)
         val full = padToFullChunk(chunk.data, ez, ey, ex, cz, cy, cx, itemSize)
         val payload =
@@ -135,15 +141,29 @@ object ZarrIO {
           else full
         writeBytes(c,
           s"$levelDir/${chunk.t}/${chunk.c}/${chunk.zi}/${chunk.yi}/${chunk.xi}", payload)
-        counter.add(1)
+        n += 1
+        chunk
+      } ++ { // by-name: runs once the partition is exhausted
+        counts.add(((level, TaskContext.getPartitionId()), n))
+        Iterator.empty
       }
     }
-    counter.value
   }
 
-  /** Reads one pyramid level back as a chunk table — the read half of the
-    * write-then-read-back level barrier (`czi_to_zarr.py:527-540`). The
-    * chunk coordinate list is tiny (grid metadata); voxel bytes are read
+  /** Writes one pyramid level and returns its chunk count (an action: the
+    * last level of a pyramid, or a level written on its own). */
+  def writeLevel(spark: SparkSession, ds: Dataset[ImageChunk], grid: ChunkGrid,
+      groupDir: String, level: Int, settings: ZeissJobSettings): Long = {
+    val counts = LevelCounts(spark, s"zarr-chunks-l$level")
+    writeThrough(spark, ds, grid, groupDir, level, settings, counts)
+      .foreachPartition((it: Iterator[ImageChunk]) => it.foreach(_ => ()))
+    counts.level(level)
+  }
+
+  /** Reads one pyramid level back as a chunk table — the reference's
+    * write-then-read-back level step (`czi_to_zarr.py:527-540`); the level
+    * chain only needs it after a blocked level-0 write. The chunk
+    * coordinate list is tiny (grid metadata); voxel bytes are read
     * and decompressed in parallel on the executors. */
   def readLevel(spark: SparkSession, groupDir: String, level: Int)
       : (ChunkGrid, Dataset[ImageChunk]) = {
@@ -201,5 +221,31 @@ object ZarrIO {
     val conf = spark.sparkContext.hadoopConfiguration
     writeString(conf, s"$groupDir/.zgroup", """{"zarr_format":2}""")
     writeString(conf, s"$groupDir/.zattrs", zattrsJson)
+  }
+}
+
+/** Chunk counts that write tasks report under (level, partition id). A
+  * task re-run after a lost shuffle output or a stage retry reports the
+  * same key with the same count, and the merge keeps one — where a
+  * `LongAccumulator` updated from shuffle-map tasks would count it twice. */
+final class LevelCounts extends AccumulatorV2[((Int, Int), Long), Map[(Int, Int), Long]] {
+  private var counts = Map.empty[(Int, Int), Long]
+  override def isZero: Boolean = counts.isEmpty
+  override def copy(): LevelCounts = { val c = new LevelCounts; c.counts = counts; c }
+  override def reset(): Unit = counts = Map.empty
+  override def add(v: ((Int, Int), Long)): Unit = counts += v
+  override def merge(other: AccumulatorV2[((Int, Int), Long), Map[(Int, Int), Long]]): Unit =
+    counts ++= other.value
+  override def value: Map[(Int, Int), Long] = counts
+  /** Chunks written for `level`, each partition counted once. */
+  def level(level: Int): Long = counts.iterator.collect { case ((`level`, _), n) => n }.sum
+}
+
+object LevelCounts {
+  /** A fresh accumulator registered with `spark`'s context. */
+  def apply(spark: SparkSession, name: String): LevelCounts = {
+    val c = new LevelCounts
+    spark.sparkContext.register(c, name)
+    c
   }
 }

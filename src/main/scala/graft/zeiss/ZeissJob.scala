@@ -1,18 +1,19 @@
 package graft.zeiss
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The compression job driver — `ZeissCompressionJob.run_job`
   * (`zeiss_job.py:222-241`) re-expressed for Spark's execution model.
   *
   * Pipeline per SURVEY §3.1: glob stacks -> deterministic sort -> regex
-  * rename -> per stack: load (synthetic stand-in for the CZI decode),
-  * rechunk to the write grid, write pyramid level 0, then per level
-  * read-back + windowed-mean + write (the reference's deliberate
-  * write-then-read-back materialization barrier, `czi_to_zarr.py:522-557` —
-  * in Spark terms the file round-trip truncates lineage so level-N graphs
-  * don't compound).
+  * rename -> per stack: load straight onto the write grid (CZI boxes, or
+  * the synthetic stand-in), then one chain of write level -> windowed-mean
+  * -> rechunk per level, executed by a single action. The reference
+  * writes each level and reads it back before the next
+  * (`czi_to_zarr.py:522-557`) so level-N graphs don't compound; here the
+  * rechunk's shuffle boundary cuts the lineage instead, and voxel bytes
+  * never make the file round-trip.
   *
   * The reference's static round-robin partitioning across SLURM nodes
   * (ops 3-4) dissolves inside one Spark app — the scheduler owns placement
@@ -135,21 +136,33 @@ object ZeissJob {
       OmeMetadata.zattrs(imageName, shape, nLevels, settings.scaleFactor,
         voxelSize, writeChunk, srcGrid.dtype, displayRange))
 
-    val counts = Seq.newBuilder[Long]
-    // level 0: synthetic source already on the write grid -> no shuffle.
-    // For arrays far beyond cluster memory, blockTargetMb bounds in-flight
-    // state by looping grid-aligned super-blocks (op 19's BlockedArrayWriter,
-    // zarr_writer.py:188-213: "reduce the scheduling burden for massive
-    // (terabyte-scale) arrays") — each block is one bounded Spark job.
-    counts += (blockTargetMb match {
-      // the grid-pruned blocked loop is a synthetic-source capability
-      // (`keep` prunes before generation); a real CZI writes in one job
+    // Levels first..n-2 are written as they stream past on the way to the
+    // next level's downsample; the last level's write is the one action.
+    // Each level adds one stage behind its rechunk shuffle.
+    val counts = LevelCounts(spark, s"zarr-chunks-$imageName")
+    def chain(first: Int, grid: ChunkGrid, ds: Dataset[ImageChunk]): Seq[Long] = {
+      val (lastGrid, lastDs) = (first until nLevels - 1).foldLeft((grid, ds)) {
+        case ((g, d), lvl) => Downsample.level(spark,
+          ZarrIO.writeThrough(spark, d, g, groupDir, lvl, settings, counts), g,
+          settings.scaleFactor, settings.chunkSize)
+      }
+      val last = ZarrIO.writeLevel(spark, lastDs, lastGrid, groupDir, nLevels - 1, settings)
+      (first until nLevels - 1).map(counts.level) :+ last
+    }
+    blockTargetMb match {
+      // For arrays far beyond cluster memory, blockTargetMb bounds in-flight
+      // state by writing level 0 as grid-aligned super-blocks (op 19's
+      // BlockedArrayWriter, zarr_writer.py:188-213: "reduce the scheduling
+      // burden for massive (terabyte-scale) arrays"), each one bounded
+      // Spark job; the chain then starts from level 0 read back, its one
+      // unavoidable read. The grid-pruned blocks are a synthetic-source
+      // capability (`keep` prunes before generation); a real CZI streams.
       case Some(mb) if czi.isEmpty =>
         val block = Grid.blockShape(shape.drop(2), writeChunk,
           srcGrid.dtype.itemSize, targetSizeMb = mb)
         // block shape is a chunk multiple by construction (expand_chunks
         // doubles the chunk), so each slice holds whole chunks
-        Grid.blockSlices(shape.drop(2), block).map { slice =>
+        val level0 = Grid.blockSlices(shape.drop(2), block).map { slice =>
           val Seq((z0, zl), (y0, yl), (x0, xl)) = slice
           val (cz, cy, cx) = (writeChunk(0), writeChunk(1), writeChunk(2))
           val sub = ChunkTable.synthetic(spark, srcGrid, seed,
@@ -159,19 +172,14 @@ object ZeissJob {
                 xi.toLong * cx >= x0 && xi.toLong * cx < x0 + xl)
           ZarrIO.writeLevel(spark, sub, srcGrid, groupDir, 0, settings)
         }.sum
-      case _ =>
-        ZarrIO.writeLevel(spark, level0Source(), srcGrid, groupDir, 0, settings)
-    })
-    // levels 1..n: read back previous level (lineage barrier), downsample
-    var lvl = 1
-    while (lvl < nLevels) {
-      val (prevGrid, prev) = ZarrIO.readLevel(spark, groupDir, lvl - 1)
-      val (lvlGrid, lvlDs) =
-        Downsample.level(spark, prev, prevGrid, settings.scaleFactor, settings.chunkSize)
-      counts += ZarrIO.writeLevel(spark, lvlDs, lvlGrid, groupDir, lvl, settings)
-      lvl += 1
+        if (nLevels == 1) Seq(level0)
+        else {
+          val (g0, l0) = ZarrIO.readLevel(spark, groupDir, 0)
+          val (g1, l1) = Downsample.level(spark, l0, g0, settings.scaleFactor, settings.chunkSize)
+          level0 +: chain(1, g1, l1)
+        }
+      case _ => chain(0, srcGrid, level0Source())
     }
-    counts.result()
   }
 
   /** `run_job` (`zeiss_job.py:222-241`). */
@@ -257,12 +265,12 @@ object ZeissJob {
       case other => throw new IllegalArgumentException(s"unrecognized args: $other")
     }
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // CziSource sizes its boxes by defaultParallelism; match the shuffles
+    spark.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toLong)
     spark.sparkContext.setLogLevel("WARN")
     val resp = runJob(spark, settings)
     println(s"""{"status_code":${resp.statusCode},"message":"${resp.message}"}""")

@@ -140,4 +140,66 @@ object CziFixture {
     }
     bytes
   }
+
+  /** 1x1x4x32x48 uint16: per Z plane, two Y-mosaic tiles; dimension starts
+    * offset (Z+10, Y+200, X+100) to exercise origin normalization. */
+  def mosaic(seed: Long): Seq[Block] =
+    for (z <- 0 until 4; ty <- 0 until 2) yield Block(
+      dims = Seq(
+        CziReader.DimEntry("X", 100, 48, 48),
+        CziReader.DimEntry("Y", 200 + ty * 16, 16, 16),
+        CziReader.DimEntry("Z", 10 + z, 1, 1),
+        CziReader.DimEntry("C", 0, 1, 1),
+        CziReader.DimEntry("T", 0, 1, 1)),
+      data = voxelBox(Dtype.UInt16, seed, 0, 0, z, ty * 16L, 0, 1, 16, 48),
+      pixelType = CziReader.PixelGray16)
+
+  /** 1x2x2x8x8 uint8: one subblock per (c, z). */
+  def gray8(seed: Long): Seq[Block] =
+    for (c <- 0 until 2; z <- 0 until 2) yield Block(
+      dims = Seq(
+        CziReader.DimEntry("X", 0, 8, 8),
+        CziReader.DimEntry("Y", 0, 8, 8),
+        CziReader.DimEntry("Z", z, 1, 1),
+        CziReader.DimEntry("C", c, 1, 1)),
+      data = voxelBox(Dtype.UInt8, seed, 0, c, z, 0, 0, 1, 8, 8),
+      pixelType = CziReader.PixelGray8)
+
+  /** 1x1x4x16x24 uint16: one zstd0-compressed subblock per Z plane. */
+  def zstd0(seed: Long): Seq[Block] = (0 until 4).map { z =>
+    Block(
+      dims = Seq(
+        CziReader.DimEntry("X", 0, 24, 24),
+        CziReader.DimEntry("Y", 0, 16, 16),
+        CziReader.DimEntry("Z", z, 1, 1)),
+      data = com.github.luben.zstd.Zstd.compress(
+        voxelBox(Dtype.UInt16, seed, 0, 0, z, 0, 0, 1, 16, 24), 3),
+      pixelType = CziReader.PixelGray16,
+      compression = CziReader.CompressionZstd0)
+  }
+
+  /** 1x1x2x8x12 uint16 as one zstd1 subblock: a size-1 header, or with
+    * `hiLo` a size-3 header and the low-byte plane before the high-byte
+    * plane. */
+  def zstd1(seed: Long, hiLo: Boolean): Seq[Block] = {
+    val raw = voxelBox(Dtype.UInt16, seed, 0, 0, 0, 0, 0, 2, 8, 12)
+    val payload =
+      if (!hiLo) Array[Byte](1) ++ com.github.luben.zstd.Zstd.compress(raw, 3)
+      else {
+        val n = raw.length / 2
+        val packed = new Array[Byte](raw.length)
+        (0 until n).foreach { i =>
+          packed(i) = raw(2 * i)
+          packed(n + i) = raw(2 * i + 1)
+        }
+        Array[Byte](3, 1, 1) ++ com.github.luben.zstd.Zstd.compress(packed, 3)
+      }
+    Seq(Block(
+      dims = Seq(
+        CziReader.DimEntry("X", 0, 12, 12),
+        CziReader.DimEntry("Y", 0, 8, 8),
+        CziReader.DimEntry("Z", 0, 2, 2)),
+      data = payload, pixelType = CziReader.PixelGray16,
+      compression = CziReader.CompressionZstd1))
+  }
 }

@@ -17,22 +17,9 @@ class CziReaderSpec extends AnyFunSuite {
 
   private def conf = TestSpark.spark.sparkContext.hadoopConfiguration
 
-  /** 1x1x4x32x48 uint16: per Z plane, two Y-mosaic tiles; dimension starts
-    * offset (Z+10, Y+200, X+100) to exercise origin normalization. */
   private def writeMosaicFixture(path: String, seed: Long,
-      metadataXml: Option[String] = None): Unit = {
-    val dt = Dtype.UInt16
-    val blocks = for (z <- 0 until 4; ty <- 0 until 2) yield CziFixture.Block(
-      dims = Seq(
-        CziReader.DimEntry("X", 100, 48, 48),
-        CziReader.DimEntry("Y", 200 + ty * 16, 16, 16),
-        CziReader.DimEntry("Z", 10 + z, 1, 1),
-        CziReader.DimEntry("C", 0, 1, 1),
-        CziReader.DimEntry("T", 0, 1, 1)),
-      data = CziFixture.voxelBox(dt, seed, 0, 0, z, ty * 16L, 0, 1, 16, 48),
-      pixelType = CziReader.PixelGray16)
-    CziFixture.write(path, blocks, metadataXml)
-  }
+      metadataXml: Option[String] = None): Unit =
+    CziFixture.write(path, CziFixture.mosaic(seed), metadataXml)
 
   test("raw layout: segment ids and directory position match the spec") {
     val path = tempCzi("graft-czi-raw")
@@ -104,16 +91,7 @@ class CziReaderSpec extends AnyFunSuite {
   test("multi-channel Gray8 stack: per-(c,z) subblocks") {
     val spark = TestSpark.spark
     val path = tempCzi("graft-czi-gray8")
-    val dt = Dtype.UInt8
-    val blocks = for (c <- 0 until 2; z <- 0 until 2) yield CziFixture.Block(
-      dims = Seq(
-        CziReader.DimEntry("X", 0, 8, 8),
-        CziReader.DimEntry("Y", 0, 8, 8),
-        CziReader.DimEntry("Z", z, 1, 1),
-        CziReader.DimEntry("C", c, 1, 1)),
-      data = CziFixture.voxelBox(dt, 3L, 0, c, z, 0, 0, 1, 8, 8),
-      pixelType = CziReader.PixelGray8)
-    CziFixture.write(path, blocks)
+    CziFixture.write(path, CziFixture.gray8(3L))
     val info = CziReader.tryOpen(conf, path).get
     assert(info.shape == Seq(1L, 2L, 2L, 8L, 8L) && info.dtype == Dtype.UInt8)
     val grid = ChunkGrid(info.shape, Seq(2, 8, 8), info.dtype.zarrName)
@@ -132,19 +110,7 @@ class CziReaderSpec extends AnyFunSuite {
   test("zstd0-compressed subblocks decode through zstd-jni") {
     val spark = TestSpark.spark
     val path = tempCzi("graft-czi-zstd0")
-    val dt = Dtype.UInt16
-    val blocks = (0 until 4).map { z =>
-      val raw = CziFixture.voxelBox(dt, 21L, 0, 0, z, 0, 0, 1, 16, 24)
-      CziFixture.Block(
-        dims = Seq(
-          CziReader.DimEntry("X", 0, 24, 24),
-          CziReader.DimEntry("Y", 0, 16, 16),
-          CziReader.DimEntry("Z", z, 1, 1)),
-        data = com.github.luben.zstd.Zstd.compress(raw, 3),
-        pixelType = CziReader.PixelGray16,
-        compression = CziReader.CompressionZstd0)
-    }
-    CziFixture.write(path, blocks)
+    CziFixture.write(path, CziFixture.zstd0(21L))
     val info = CziReader.tryOpen(conf, path).get
     assert(info.shape == Seq(1L, 1L, 4L, 16L, 24L))
     val grid = ChunkGrid(info.shape, Seq(4, 16, 24), info.dtype.zarrName)
@@ -272,15 +238,6 @@ class CziReaderSpec extends AnyFunSuite {
 
   test("zstd1 subblocks decode, with and without hi-lo byte packing") {
     val spark = TestSpark.spark
-    val dt = Dtype.UInt16
-    val raw = CziFixture.voxelBox(dt, 33L, 0, 0, 0, 0, 0, 2, 8, 12)
-    def block(payload: Array[Byte]) = CziFixture.Block(
-      dims = Seq(
-        CziReader.DimEntry("X", 0, 12, 12),
-        CziReader.DimEntry("Y", 0, 8, 8),
-        CziReader.DimEntry("Z", 0, 2, 2)),
-      data = payload, pixelType = CziReader.PixelGray16,
-      compression = CziReader.CompressionZstd1)
     def verify(path: String): Unit = {
       val info = CziReader.tryOpen(conf, path).get
       assert(info.shape == Seq(1L, 1L, 2L, 8L, 12L))
@@ -295,19 +252,11 @@ class CziReaderSpec extends AnyFunSuite {
     }
     // size-1 header: [0x01] ++ zstd(raw)
     val plain = tempCzi("graft-czi-zstd1")
-    CziFixture.write(plain, Seq(block(
-      Array[Byte](1) ++ com.github.luben.zstd.Zstd.compress(raw, 3))))
+    CziFixture.write(plain, CziFixture.zstd1(33L, hiLo = false))
     verify(plain)
     // size-3 header with the hi-lo bit: low-byte plane then high-byte plane
-    val n = raw.length / 2
-    val packed = new Array[Byte](raw.length)
-    (0 until n).foreach { i =>
-      packed(i) = raw(2 * i)
-      packed(n + i) = raw(2 * i + 1)
-    }
     val hilo = tempCzi("graft-czi-zstd1-hilo")
-    CziFixture.write(hilo, Seq(block(
-      Array[Byte](3, 1, 1) ++ com.github.luben.zstd.Zstd.compress(packed, 3))))
+    CziFixture.write(hilo, CziFixture.zstd1(33L, hiLo = true))
     verify(hilo)
   }
 
