@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -24,7 +25,65 @@ final case class QueryDef(
 object Q {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with a memoized schema. Without a schema,
+    * each read runs a one-task schema-inference job (12-20 per pass over
+    * the one-query-per-module panel; q03 alone ran 5). A memo entry is
+    * keyed by everything that decides what inference returns: the qualified
+    * path, each file's path, length and modification time, and the
+    * session's values of [[InferenceConfs]]; so a table rewritten at the
+    * same path, or read under other confs, is inferred again and never
+    * served a stale schema. LRU-bounded like `IngestIndex`'s memos. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path) // missing: Spark names the error
+      case Some(key) =>
+        val cached = schemaMemo.synchronized(schemaMemo.get(key))
+        if (cached != null) spark.read.schema(cached).parquet(path)
+        else {
+          val df = spark.read.parquet(path)
+          schemaMemo.synchronized(schemaMemo.put(key, df.schema))
+          df
+        }
+    }
+
+  /** Session confs that change the schema parquet inference yields. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles")
+
+  private val SchemaMemoMaxEntries = 256
+
+  private val schemaMemo =
+    new java.util.LinkedHashMap[String, StructType](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, StructType]): Boolean =
+        size() > SchemaMemoMaxEntries
+    }
+
+  private def schemaKey(spark: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return None
+    val key = new StringBuilder(fs.makeQualified(p).toString)
+    // listStatus, not listFiles: a LocatedFileStatus reads the permission,
+    // which the local filesystem loads by forking `ls`
+    def leaves(d: Path): Iterator[FileStatus] =
+      fs.listStatus(d).iterator.flatMap(f => if (f.isDirectory) leaves(f.getPath) else Iterator(f))
+    leaves(p).foreach(f => key ++= s"|${f.getPath}:${f.getLen}:${f.getModificationTime}")
+    InferenceConfs.foreach(c => key ++= s"|$c=${spark.conf.getOption(c).getOrElse("")}")
+    Some(key.toString)
+  }
+
+  /** Test hook: whether the next [[readParquet]] of `path` reuses a
+    * memoized schema. */
+  private[graft] def schemaMemoized(spark: SparkSession, path: String): Boolean =
+    schemaKey(spark, path).exists(k => schemaMemo.synchronized(schemaMemo.containsKey(k)))
 
   /** Schema-adaptive events ingestion. The data generator has shipped
     * events.ts as parquet TIMESTAMP(NANOS) (one generation) and as
@@ -40,7 +99,7 @@ object Q {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = readParquet(spark, s"$dir/events.parquet")
     val ts = raw.schema("ts").dataType match {
       case LongType =>
         // Sanity guard on the nanos assumption: a future generation

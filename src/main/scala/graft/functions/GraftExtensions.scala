@@ -13,10 +13,24 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * cluster's spark-defaults) has `cosine_sim` / `dot_product` available in
   * SQL and `expr(...)` without per-query registration. The per-session
   * [[GraftFunctions.register]] remains for ad-hoc use.
+  *
+  * It also installs the engine's session defaults
+  * ([[GraftExtensions.Defaults]]): a codegen cache that holds the engine's
+  * plan mix, and the fork-free local filesystem of [[graft.io]].
+  * `withExtensions` calls `apply` before the builder creates its
+  * `SparkConf`, and that `SparkConf` loads `spark.*` system properties, so
+  * each default is set as a system property, and only when that property is
+  * not set already: an explicit `-D` or a builder `.config` still wins.
+  * Both act once per JVM. The codegen cache is sized when the first query
+  * of the JVM is compiled, and the `file:` FileSystem is cached by the first
+  * `FileSystem.get`; each takes effect only if the first engine session
+  * comes before them. Through `spark.sql.extensions` the defaults arrive
+  * after the `SparkContext` is built and do not apply to it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.installDefaults(System.getProperties)
     ext.injectFunction((
       new FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
@@ -64,4 +78,30 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectParser((_, delegate) =>
       new graft.operators.GraftSqlParser(delegate))
   }
+}
+
+object GraftExtensions {
+
+  /** Engine session defaults, as `spark.*` configuration entries.
+    *
+    * Codegen cache: Spark keeps 100 generated classes. One pass over a panel
+    * of one query per query module generates about 420, so every pass
+    * recompiled all of them with Janino (3.7 s per pass on a 4-core
+    * machine) and ran them cold. At local[4], 400 entries still left 119
+    * compiles per pass, and 800 left only the per-trigger classes of a
+    * streaming query; 2000 leaves room for the 170-query verification mix.
+    *
+    * Local filesystem: without libhadoop, Hadoop's `file:` filesystem forks
+    * `chmod` per created file or directory and `readlink` per FileContext
+    * status, milliseconds each; [[graft.io.NioLocalFileSystem]] and
+    * [[graft.io.NioLocalFs]] write the same bytes, checksums and modes
+    * without a fork. */
+  val Defaults: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> "2000",
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.NioLocalFs].getName)
+
+  /** Sets each of [[Defaults]] in `props` unless it is already there. */
+  def installDefaults(props: java.util.Properties): Unit =
+    Defaults.foreach { case (k, v) => props.putIfAbsent(k, v) }
 }

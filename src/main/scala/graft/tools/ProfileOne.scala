@@ -1,14 +1,21 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev-only: run named queries (comma-separated) once each (after warm
-  * reps) with a listener that prints, per query, the Spark job count, the
-  * summed job wall-clock, the summed inter-job gaps (driver-side work:
-  * planning, manifest IO, stream trigger scheduling), summed task time,
-  * GC time and shuffle volume — the local-mode substitute for the Spark
-  * UI's Jobs page (the bench box runs with the UI off).
+  * passes over the whole list) with a listener that prints, per query, the
+  * Spark job count, the summed job wall-clock, the summed inter-job gaps
+  * (driver-side work: planning, manifest IO, stream trigger scheduling),
+  * summed task time, GC time, shuffle volume, and the codegen compiles and
+  * Janino milliseconds it paid — the local-mode substitute for the Spark
+  * UI's Jobs page (the bench box runs with the UI off). Warm passes run the
+  * whole list in order, so a profiled query sees the codegen cache a
+  * repeated pass over the list leaves it.
+  *
+  * Usage: `ProfileOne <q1,q2,...> [sfDir] [warmPasses] [key=value ...]`
   */
 object ProfileOne {
   private case class JobRow(id: Int, submitted: Long, var desc: String,
@@ -21,10 +28,11 @@ object ProfileOne {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val warmReps =
       if (args.length > 2 && !args(2).contains("=")) args(2).toInt else 1
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -86,21 +94,36 @@ object ProfileOne {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    names.foreach { name =>
-      def run(): Unit =
-        graft.SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-      (1 to warmReps).foreach { i =>
+    def run(name: String): Unit =
+      graft.SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+    // codegen cache misses and Janino time since the last call: a query
+    // that recompiles on every pass shows its plan mix outgrowing
+    // spark.sql.codegen.cache.maxEntries
+    var (compiles0, compileNs0) = (0L, 0L)
+    def codegen(): String = {
+      val (c, ns) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+      val out = f"compiles=${c - compiles0} compileMs=${(ns - compileNs0) / 1e6}%.0f"
+      compiles0 = c; compileNs0 = ns
+      out
+    }
+    (1 to warmReps).foreach { i =>
+      names.foreach { name =>
+        codegen()
         val t0 = System.nanoTime()
-        run()
-        println(f"[profile] $name warm rep$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        run(name)
+        println(f"[profile] $name warm rep$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ${codegen()}")
       }
+    }
+    names.foreach { name =>
       rows.clear(); stageToJob.clear()
+      codegen()
       recording = true
       val t0 = System.nanoTime()
-      run()
+      run(name)
       val wall = (System.nanoTime() - t0) / 1e9
       recording = false
+      val compiled = codegen()
       Thread.sleep(500) // let the listener bus drain
       import scala.jdk.CollectionConverters._
       val all = rows.values.asScala.toSeq.sortBy(_.submitted)
@@ -129,7 +152,7 @@ object ProfileOne {
       val sw = all.map(_.shuffleWrite).sum / 1024 / 1024
       println(f"[profile] $name wall=$wall%.2f s jobs=${all.size} " +
         f"jobWall=${jobTotal / 1000.0}%.2f s gaps=${gapTotal / 1000.0}%.2f s " +
-        f"task=$task%.1f s gc=$gc%.1f s shufR=${sr}MB shufW=${sw}MB")
+        f"task=$task%.1f s gc=$gc%.1f s shufR=${sr}MB shufW=${sw}MB $compiled")
     }
     spark.stop()
   }

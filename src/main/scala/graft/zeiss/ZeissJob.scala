@@ -266,6 +266,7 @@ object ZeissJob {
     }
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+      .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1,6 +1,10 @@
 package graft.functions
 
+import java.net.URI
+
 import graft.TestSpark
+import graft.io.{NioLocalFileSystem, NioLocalFs}
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,6 +32,53 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // the base session (no extensions, no registration) must NOT see it
       val baseHas = base.catalog.functionExists("cosine_sim")
       assert(!baseHas || true) // informational; registries are per-session
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
+  private val CacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  test("engine defaults are installed only where absent") {
+    val props = new java.util.Properties
+    props.setProperty(CacheKey, "64")
+    GraftExtensions.installDefaults(props)
+    assert(props.getProperty(CacheKey) == "64")
+    assert(props.getProperty("spark.hadoop.fs.file.impl") ==
+      classOf[NioLocalFileSystem].getName)
+    assert(props.getProperty("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
+      classOf[NioLocalFs].getName)
+    GraftExtensions.installDefaults(props)
+    assert(props.size == GraftExtensions.Defaults.size)
+  }
+
+  test("a TestSpark session runs on the engine defaults") {
+    val spark = TestSpark.spark
+    // the session follows the JVM's property: the default, or a -D that won
+    for ((k, _) <- GraftExtensions.Defaults)
+      assert(spark.sparkContext.getConf.get(k) ==
+        Option(System.getProperty(k)).getOrElse(fail(s"$k not installed")))
+    assert(spark.conf.get(CacheKey) == System.getProperty(CacheKey))
+    val hc = spark.sparkContext.hadoopConfiguration
+    assert(FileSystem.get(new URI("file:///"), hc).getClass == classOf[NioLocalFileSystem])
+    assert(FileSystem.getLocal(hc).getClass == classOf[NioLocalFileSystem])
+    assert(FileContext.getFileContext(new URI("file:///"), hc)
+      .getDefaultFileSystem.isInstanceOf[NioLocalFs])
+  }
+
+  test("a builder .config wins over an engine default") {
+    val base = TestSpark.spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val spark = SparkSession.builder()
+        .withExtensions(new GraftExtensions)
+        .config(CacheKey, "777")
+        .getOrCreate()
+      assert(spark ne base)
+      assert(spark.conf.get(CacheKey) == "777")
+      assert(base.conf.get(CacheKey) == System.getProperty(CacheKey))
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)
