@@ -34,18 +34,11 @@ object Q {
     * path, each file's path, length and modification time, and the
     * session's values of [[InferenceConfs]]; so a table rewritten at the
     * same path, or read under other confs, is inferred again and never
-    * served a stale schema. LRU-bounded like `IngestIndex`'s memos. */
+    * served a stale schema. */
   private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
     schemaKey(spark, path) match {
       case None => spark.read.parquet(path) // missing: Spark names the error
-      case Some(key) =>
-        val cached = schemaMemo.synchronized(schemaMemo.get(key))
-        if (cached != null) spark.read.schema(cached).parquet(path)
-        else {
-          val df = spark.read.parquet(path)
-          schemaMemo.synchronized(schemaMemo.put(key, df.schema))
-          df
-        }
+      case Some(key) => schemaMemo.read(spark, path, key)
     }
 
   /** Session confs that change the schema parquet inference yields. */
@@ -57,14 +50,7 @@ object Q {
     "spark.sql.parquet.mergeSchema",
     "spark.sql.parquet.respectSummaryFiles")
 
-  private val SchemaMemoMaxEntries = 256
-
-  private val schemaMemo =
-    new java.util.LinkedHashMap[String, StructType](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, StructType]): Boolean =
-        size() > SchemaMemoMaxEntries
-    }
+  private val schemaMemo = new SchemaMemo(256)
 
   private def schemaKey(spark: SparkSession, path: String): Option[String] = {
     val p = new Path(path)
@@ -83,7 +69,7 @@ object Q {
   /** Test hook: whether the next [[readParquet]] of `path` reuses a
     * memoized schema. */
   private[graft] def schemaMemoized(spark: SparkSession, path: String): Boolean =
-    schemaKey(spark, path).exists(k => schemaMemo.synchronized(schemaMemo.containsKey(k)))
+    schemaKey(spark, path).exists(schemaMemo.contains)
 
   /** Schema-adaptive events ingestion. The data generator has shipped
     * events.ts as parquet TIMESTAMP(NANOS) (one generation) and as

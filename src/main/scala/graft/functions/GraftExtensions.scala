@@ -21,11 +21,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `SparkConf`, and that `SparkConf` loads `spark.*` system properties, so
   * each default is set as a system property, and only when that property is
   * not set already: an explicit `-D` or a builder `.config` still wins.
+  * The properties stay set, so every `SparkConf` made later in the JVM
+  * carries them, also one for a session built without this extension.
   * Both act once per JVM. The codegen cache is sized when the first query
   * of the JVM is compiled, and the `file:` FileSystem is cached by the first
   * `FileSystem.get`; each takes effect only if the first engine session
-  * comes before them. Through `spark.sql.extensions` the defaults arrive
-  * after the `SparkContext` is built and do not apply to it.
+  * comes before them, and a `.config` of either key on a later session
+  * changes its conf but not the cache or the FileSystem in use. Through
+  * `spark.sql.extensions` the defaults arrive after the `SparkContext` is
+  * built and do not apply to it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -89,7 +93,10 @@ object GraftExtensions {
     * recompiled all of them with Janino (3.7 s per pass on a 4-core
     * machine) and ran them cold. At local[4], 400 entries still left 119
     * compiles per pass, and 800 left only the per-trigger classes of a
-    * streaming query; 2000 leaves room for the 170-query verification mix.
+    * streaming query, as 2000 did. A repeated pass over all 170 queries
+    * would need about 3,800 entries (3,615 compiles at 800, 914 at
+    * 20,000), but `Verify` and `Bench` run each query once, and one pass
+    * compiled 3,947 classes at 800 against 3,757 at 20,000.
     *
     * Local filesystem: without libhadoop, Hadoop's `file:` filesystem forks
     * `chmod` per created file or directory and `readlink` per FileContext
@@ -97,7 +104,7 @@ object GraftExtensions {
     * [[graft.io.NioLocalFs]] write the same bytes, checksums and modes
     * without a fork. */
   val Defaults: Seq[(String, String)] = Seq(
-    "spark.sql.codegen.cache.maxEntries" -> "2000",
+    "spark.sql.codegen.cache.maxEntries" -> "800",
     "spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.NioLocalFs].getName)
 

@@ -295,6 +295,8 @@ object IngestIndex {
     * saves on the (large) base. */
   private val MemoPrefixBytes = 128
 
+  private val MemoMaxEntries = 4096
+
   /** (dir, v) -> (manifest mtime, length, content prefix, resolved) —
     * stat+prefix-validated so a replay's byte-identical rewrite (new
     * mtime) just re-reads, and a compaction's repoint (new content) can
@@ -331,27 +333,11 @@ object IngestIndex {
     * job + ~50-100 ms scheduling gap each — measured in q144, guide §1).
     * LRU-bounded like the manifest memo; keys are dir paths, so renames
     * and compaction epochs (new paths) can never serve stale schemas. */
-  private val schemaMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String,
-        org.apache.spark.sql.types.StructType](256, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String,
-            org.apache.spark.sql.types.StructType]): Boolean =
-        size() > MemoMaxEntries
-    })
+  private val schemaMemo = new graft.SchemaMemo(MemoMaxEntries)
 
-  /** Read an immutable version dir with its memoized schema (first read
-    * pays the inference job and seeds the memo). */
-  private def readVersionDir(spark: SparkSession, path: String)
-      : DataFrame = {
-    val cached = schemaMemo.get(path)
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaMemo.put(path, df.schema)
-      df
-    }
-  }
+  /** Read an immutable version dir with its memoized schema. */
+  private def readVersionDir(spark: SparkSession, path: String): DataFrame =
+    schemaMemo.read(spark, path, key = path)
 
   private def prefixOf(bytes: Array[Byte]): Array[Byte] =
     bytes.take(MemoPrefixBytes)
@@ -453,8 +439,6 @@ object IngestIndex {
       (st.getModificationTime, st.getLen, prefixOf(raw), res))
     Some(res)
   }
-
-  private val MemoMaxEntries = 4096
 
   /** The operation tag legacy (pre-r17) manifests read back as. */
   val DefaultOp = "commit"

@@ -15,7 +15,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * whole list in order, so a profiled query sees the codegen cache a
   * repeated pass over the list leaves it.
   *
-  * Usage: `ProfileOne <q1,q2,...> [sfDir] [warmPasses] [key=value ...]`
+  * Usage: `ProfileOne <q1,q2,...|all> [sfDir] [warmPasses] [key=value ...]`
+  * (`all`: every query of [[graft.SparkEntry.allDefs]], the verification mix)
   */
 object ProfileOne {
   private case class JobRow(id: Int, submitted: Long, var desc: String,
@@ -24,7 +25,9 @@ object ProfileOne {
     var tasks: Int = 0)
 
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").toSeq
+    val names =
+      if (args(0) == "all") graft.SparkEntry.allDefs.map(_.name)
+      else args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val warmReps =
       if (args.length > 2 && !args(2).contains("=")) args(2).toInt else 1

@@ -1,11 +1,19 @@
 package graft.functions
 
+import java.lang.management.ManagementFactory
 import java.net.URI
+import java.nio.file.Paths
+
+import scala.io.Source
+import scala.jdk.CollectionConverters._
 
 import graft.TestSpark
 import graft.io.{NioLocalFileSystem, NioLocalFs}
-import org.apache.hadoop.fs.{FileContext, FileSystem}
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem}
+import org.apache.hadoop.fs.local.LocalFs
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftExtensionsSpec extends AnyFunSuite {
@@ -39,6 +47,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   private val CacheKey = "spark.sql.codegen.cache.maxEntries"
+  private val FsKey = "spark.hadoop.fs.file.impl"
+  private val AfsKey = "spark.hadoop.fs.AbstractFileSystem.file.impl"
 
   test("engine defaults are installed only where absent") {
     val props = new java.util.Properties
@@ -67,21 +77,61 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .getDefaultFileSystem.isInstanceOf[NioLocalFs])
   }
 
-  test("a builder .config wins over an engine default") {
-    val base = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val spark = SparkSession.builder()
-        .withExtensions(new GraftExtensions)
-        .config(CacheKey, "777")
-        .getOrCreate()
-      assert(spark ne base)
-      assert(spark.conf.get(CacheKey) == "777")
-      assert(base.conf.get(CacheKey) == System.getProperty(CacheKey))
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+  test("every SparkConf made after the extension ran carries the defaults") {
+    TestSpark.spark
+    // what a session built without the extension would start from
+    val conf = new SparkConf()
+    for ((k, _) <- GraftExtensions.Defaults)
+      assert(conf.get(k) == System.getProperty(k))
+  }
+
+  test("in a fresh JVM, a -D or builder .config wins over a default, and a later session without the extension still gets the rest") {
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val opens = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filter(_.startsWith("--add-opens"))
+    val cmd = Seq(java, "-Xmx512m") ++ opens ++ Seq(
+      s"-D$AfsKey=${classOf[LocalFs].getName}",
+      "-cp", System.getProperty("java.class.path"),
+      DefaultsProbe.getClass.getName.stripSuffix("$"),
+      s"$FsKey=${classOf[LocalFileSystem].getName}", s"$CacheKey=777")
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val lines = Source.fromInputStream(proc.getInputStream).getLines().toList
+    assert(proc.waitFor() == 0, lines.takeRight(20).mkString("\n"))
+    val seen = lines.collect { case s"[probe] $k=$v" => k -> v }.toMap
+    assert(seen == Map(
+      // the JVM's first session: builder .config and -D win, in effect
+      "fs" -> classOf[LocalFileSystem].getName,
+      "afs" -> classOf[LocalFs].getName,
+      "cache" -> "777",
+      // a later session built without the extension: the defaults the
+      // first one installed as system properties, and the -D
+      s"plain.$FsKey" -> classOf[NioLocalFileSystem].getName,
+      s"plain.$AfsKey" -> classOf[LocalFs].getName,
+      s"plain.$CacheKey" -> GraftExtensions.Defaults.toMap.apply(CacheKey)))
+  }
+}
+
+/** Run by [[GraftExtensionsSpec]] in a JVM of its own, so its first session
+  * is the JVM's first: builds it with the extension and the `key=value`
+  * builder configs given as arguments, prints what that session runs on,
+  * stops it, then builds a session without the extension and prints its
+  * engine-default keys. */
+object DefaultsProbe {
+  def main(args: Array[String]): Unit = {
+    def session(b: SparkSession.Builder): SparkSession =
+      b.master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+    val b = SparkSession.builder().withExtensions(new GraftExtensions)
+    args.foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) }
+    val spark = session(b)
+    val hc = spark.sparkContext.hadoopConfiguration
+    println(s"[probe] fs=${FileSystem.get(new URI("file:///"), hc).getClass.getName}")
+    println(s"[probe] afs=${FileContext.getFileContext(new URI("file:///"), hc)
+      .getDefaultFileSystem.getClass.getName}")
+    println(s"[probe] cache=${SQLConf.get.codegenCacheMaxEntries}")
+    spark.stop()
+    val plain = session(SparkSession.builder())
+    for ((k, _) <- GraftExtensions.Defaults)
+      println(s"[probe] plain.$k=${plain.sparkContext.getConf.get(k)}")
+    plain.stop()
   }
 }
