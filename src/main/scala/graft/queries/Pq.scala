@@ -47,6 +47,7 @@ object Pq {
 
   val SubSpaces = 8
   val SubDim = 8
+  private val ms = 0 until SubSpaces
   val CodebookK = 16
   val AdcCandidates = 32
   val TopK = 10
@@ -233,15 +234,10 @@ object Pq {
   private def refineStep(ed: DataFrame,
       books: IndexedSeq[IndexedSeq[(Int, IndexedSeq[Double])]])
       : IndexedSeq[IndexedSeq[(Int, IndexedSeq[Double])]] = {
-    val assigned = (0 until SubSpaces).foldLeft(
-        ed.select(col("vec_id"), col("e"))) { (acc, m) =>
-      acc.withColumn(s"sv_$m", slice(col("e"), m * SubDim + 1, SubDim))
-        .withColumn(s"d_$m", array(books(m).map { case (_, sc) =>
-          f4(distTo(col(s"sv_$m"), sc)) }: _*))
-        .withColumn(s"c0_$m", element_at(
-          array(books(m).map(x => lit(x._1)): _*),
-          expr(s"array_position(d_$m, array_min(d_$m))").cast(IntegerType)))
-    }
+    val assigned = literalDistances(
+        ed.select(col("vec_id"), col("e")).select(col("*") +: subVectors: _*), books)
+      .select(col("*") +: ms.map(m =>
+        element_at(array(books(m).map(x => lit(x._1)): _*), codePos(m)).as(s"c0_$m")): _*)
     val refined = assigned.select(col("vec_id"),
         explode(array((0 until SubSpaces).map(m => struct(
           lit(m).as("m"), col(s"c0_$m").as("cid"),
@@ -281,18 +277,31 @@ object Pq {
   private[graft] def adcScored(df: DataFrame,
       books: IndexedSeq[IndexedSeq[(Int, IndexedSeq[Double])]],
       lut: IndexedSeq[IndexedSeq[Double]]): DataFrame = {
-    val scored = (0 until SubSpaces).foldLeft(df) { (acc, m) =>
-      acc.withColumn(s"sv_$m", slice(col("e"), m * SubDim + 1, SubDim))
-        .withColumn(s"pd_$m", array(books(m).map { case (_, ce) =>
-          f4(distTo(col(s"sv_$m"), ce)) }: _*))
-        .withColumn(s"t_$m", element_at(
-          array(lut(m).map(lit): _*),
-          expr(s"array_position(pd_$m, array_min(pd_$m))").cast(IntegerType)))
-    }
-    scored.withColumn("adc_dist",
-      (0 until SubSpaces).map(m => col(s"t_$m").cast(dec4))
-        .reduce(_ + _).cast(DoubleType))
+    withAdcDist(literalDistances(df.select(col("*") +: subVectors: _*), books)
+      .select(col("*") +: ms.map(m => element_at(array(lut(m).map(lit): _*), codePos(m))
+        .as(s"t_$m")): _*))
   }
+
+  /** `sv_m`: subspace m's slice of `e`. Each per-subspace family of
+    * columns below is added in ONE projection: a `withColumn` per column
+    * re-analyzes the growing plan every time. */
+  private def subVectors: Seq[Column] =
+    ms.map(m => slice(col("e"), m * SubDim + 1, SubDim).as(s"sv_$m"))
+
+  /** Adds `pd_m`: the f4 distances of `sv_m` to every centroid of book m. */
+  private def literalDistances(df: DataFrame,
+      books: IndexedSeq[IndexedSeq[(Int, IndexedSeq[Double])]]): DataFrame =
+    df.select(col("*") +: ms.map(m => array(books(m).map { case (_, ce) =>
+      f4(distTo(col(s"sv_$m"), ce)) }: _*).as(s"pd_$m")): _*)
+
+  /** 1-based position of subspace m's nearest centroid (first minimum). */
+  private def codePos(m: Int): Column =
+    expr(s"array_position(pd_$m, array_min(pd_$m))").cast(IntegerType)
+
+  /** Adds `adc_dist`: the `t_m` terms summed in exact DECIMAL(18,4). */
+  private def withAdcDist(scored: DataFrame): DataFrame =
+    scored.withColumn("adc_dist",
+      ms.map(m => col(s"t_$m").cast(dec4)).reduce(_ + _).cast(DoubleType))
 
   /** Conf gate for [[adcScoredBroadcast]]: carry the codebooks + LUT as
     * ONE broadcast model row instead of plan literals. At the test-scale
@@ -327,19 +336,13 @@ object Pq {
       java.util.Collections.singletonList(row), schema)
     val joined = df.crossJoin(
       graft.BroadcastBounds.bounded("pq-model")(model))
-    val scored = (0 until SubSpaces).foldLeft(joined) { (acc, m) =>
-      acc.withColumn(s"sv_$m", slice(col("e"), m * SubDim + 1, SubDim))
-        .withColumn(s"pd_$m", transform(element_at(col("bk_ce"), m + 1),
-          ce => f4(aggregate(zip_with(col(s"sv_$m"), ce,
-            (a, b) => (a - b) * (a - b)),
-            lit(0.0), (acc2, x) => acc2 + x))))
-        .withColumn(s"t_$m", element_at(element_at(col("bk_lut"), m + 1),
-          expr(s"array_position(pd_$m, array_min(pd_$m))")
-            .cast(IntegerType)))
-    }
-    scored.withColumn("adc_dist",
-      (0 until SubSpaces).map(m => col(s"t_$m").cast(dec4))
-        .reduce(_ + _).cast(DoubleType))
+    withAdcDist(joined.select(col("*") +: subVectors: _*)
+      .select(col("*") +: ms.map(m => transform(element_at(col("bk_ce"), m + 1),
+        ce => f4(aggregate(zip_with(col(s"sv_$m"), ce,
+          (a, b) => (a - b) * (a - b)),
+          lit(0.0), (acc2, x) => acc2 + x))).as(s"pd_$m")): _*)
+      .select(col("*") +: ms.map(m =>
+        element_at(element_at(col("bk_lut"), m + 1), codePos(m)).as(s"t_$m")): _*))
       .drop("bk_ce", "bk_lut")
   }
 
@@ -461,23 +464,15 @@ object Pq {
   private[graft] def adcScoredPerCell(df: DataFrame,
       books: IndexedSeq[IndexedSeq[(Int, IndexedSeq[Double])]],
       luts: Seq[(Long, IndexedSeq[IndexedSeq[Double]])]): DataFrame = {
-    val scored = (0 until SubSpaces).foldLeft(df) { (acc, m) =>
-      val pos = expr(s"array_position(pd_$m, array_min(pd_$m))")
-        .cast(IntegerType)
+    def term(m: Int): Column = {
       def el(lut: IndexedSeq[IndexedSeq[Double]]): Column =
-        element_at(array(lut(m).map(lit): _*), pos)
-      acc.withColumn(s"sv_$m", slice(col("e"), m * SubDim + 1, SubDim))
-        .withColumn(s"pd_$m", array(books(m).map { case (_, ce) =>
-          f4(distTo(col(s"sv_$m"), ce)) }: _*))
-        .withColumn(s"t_$m", luts.tail.foldLeft(
-          when(col("cid") === luts.head._1, el(luts.head._2))) {
-          case (acc2, (cid, lut)) =>
-            acc2.when(col("cid") === cid, el(lut))
-        })
+        element_at(array(lut(m).map(lit): _*), codePos(m))
+      luts.tail.foldLeft(when(col("cid") === luts.head._1, el(luts.head._2))) {
+        case (acc, (cid, lut)) => acc.when(col("cid") === cid, el(lut))
+      }.as(s"t_$m")
     }
-    scored.withColumn("adc_dist",
-      (0 until SubSpaces).map(m => col(s"t_$m").cast(dec4))
-        .reduce(_ + _).cast(DoubleType))
+    withAdcDist(literalDistances(df.select(col("*") +: subVectors: _*), books)
+      .select(col("*") +: ms.map(term): _*))
   }
 
   /** Q109b: IVF-PQ with RESIDUAL encoding — the full FAISS IndexIVFPQ:

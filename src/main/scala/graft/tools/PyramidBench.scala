@@ -3,7 +3,8 @@ package graft.tools
 import graft.zeiss._
 import org.apache.spark.sql.SparkSession
 
-/** Dev benchmark for the image-pyramid path at a configurable size.
+/** Dev benchmark for the image-pyramid path at a configurable size, on
+  * `local[SPARK_GRAFT_CPUS]` (default 32) with as many shuffle partitions.
   * Usage: runMain graft.tools.PyramidBench [z y x] [chunk] [levels]
   */
 object PyramidBench {
@@ -12,10 +13,11 @@ object PyramidBench {
       (args(0).toLong, args(1).toLong, args(2).toLong) else (512L, 512L, 512L)
     val chunk = if (args.length >= 4) args(3).toInt else 128
     val levels = if (args.length >= 5) args(4).toInt else 3
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

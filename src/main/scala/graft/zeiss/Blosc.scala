@@ -36,12 +36,17 @@ object Blosc {
     if (typeSize <= 1) return src
     val n = src.length / typeSize
     val out = new Array[Byte](src.length)
-    var j = 0
-    while (j < typeSize) {
+    if (typeSize == 2) { // uint16 voxels: both byte planes in one pass
       var i = 0
-      val base = j * n
-      while (i < n) { out(base + i) = src(i * typeSize + j); i += 1 }
-      j += 1
+      while (i < n) { out(i) = src(2 * i); out(n + i) = src(2 * i + 1); i += 1 }
+    } else {
+      var j = 0
+      while (j < typeSize) {
+        var i = 0
+        val base = j * n
+        while (i < n) { out(base + i) = src(i * typeSize + j); i += 1 }
+        j += 1
+      }
     }
     // trailing bytes (length not divisible by typesize) are copied verbatim,
     // matching c-blosc's leftover handling
@@ -54,12 +59,17 @@ object Blosc {
     if (typeSize <= 1) return src
     val n = src.length / typeSize
     val out = new Array[Byte](src.length)
-    var j = 0
-    while (j < typeSize) {
+    if (typeSize == 2) {
       var i = 0
-      val base = j * n
-      while (i < n) { out(i * typeSize + j) = src(base + i); i += 1 }
-      j += 1
+      while (i < n) { out(2 * i) = src(i); out(2 * i + 1) = src(n + i); i += 1 }
+    } else {
+      var j = 0
+      while (j < typeSize) {
+        var i = 0
+        val base = j * n
+        while (i < n) { out(i * typeSize + j) = src(base + i); i += 1 }
+        j += 1
+      }
     }
     var k = n * typeSize
     while (k < src.length) { out(k) = src(k); k += 1 }

@@ -346,16 +346,17 @@ object CziReader {
     * C-order bytes over the entry's dimension extents (X fastest). */
   def payload(conf: Configuration, path: String, e: SubblockEntry): Array[Byte] = {
     val in = openStream(conf, path)
-    try rows(in, e, 0, e.size("Z"), 0, e.size("Y")) finally in.close()
+    try rows(in, e, 0, e.size("Z"), 0, e.size("Y"), 0, e.size("X")) finally in.close()
   }
 
-  /** Subblock `e`'s pixels over its Z planes [z0, z1) and rows [y0, y1)
-    * (entry-relative, full X width), decoded to raw little-endian C-order
-    * bytes. An uncompressed payload is read only over those rows, one
-    * positional read per Z plane; a zstd payload is decoded whole, then
+  /** Subblock `e`'s pixels over its Z planes [z0, z1), rows [y0, y1) and
+    * columns [x0, x1) (entry-relative), decoded to raw little-endian
+    * C-order bytes. An uncompressed payload is read only over that
+    * region: one positional read per Z plane when the columns span the
+    * full width, else one per row; a zstd payload is decoded whole, then
     * cut. */
   def rows(in: FSDataInputStream, e: SubblockEntry,
-      z0: Int, z1: Int, y0: Int, y1: Int): Array[Byte] = {
+      z0: Int, z1: Int, y0: Int, y1: Int, x0: Int, x1: Int): Array[Byte] = {
     // segment header (32) + subblock fixed part (16) in one read
     val head = new Array[Byte](48)
     in.readFully(e.filePosition, head)
@@ -374,18 +375,22 @@ object CziReader {
     require(dataSize > 0 && dataSize <= Int.MaxValue - 8,
       s"implausible dataSize $dataSize")
     val (ey, rowBytes) = (e.size("Y"), e.size("X") * itemSize)
-    val cutBytes = (y1 - y0) * rowBytes
+    val fullWidth = x0 == 0 && x1 == e.size("X")
+    val (cutRow, colOff) = ((x1 - x0) * itemSize, x0 * itemSize)
+    val cutBytes = (y1 - y0) * cutRow
+    val out = new Array[Byte]((z1 - z0) * cutBytes)
     e.compression match {
       case CompressionNone =>
         // a corrupt dataSize must fail loudly, not hand the grid a
         // wrong-sized voxel box
         require(dataSize == rawSize,
           s"uncompressed payload $dataSize bytes, extents say $rawSize")
-        val out = new Array[Byte]((z1 - z0) * cutBytes)
         var z = z0
         while (z < z1) {
-          in.readFully(dataOff + (z.toLong * ey + y0) * rowBytes,
-            out, (z - z0) * cutBytes, cutBytes)
+          val plane = dataOff + (z.toLong * ey + y0) * rowBytes
+          if (fullWidth) in.readFully(plane, out, (z - z0) * cutBytes, cutBytes)
+          else (0 until y1 - y0).foreach(y => in.readFully(plane + y.toLong * rowBytes + colOff,
+            out, (z - z0) * cutBytes + y * cutRow, cutRow))
           z += 1
         }
         out
@@ -393,11 +398,10 @@ object CziReader {
         val stored = new Array[Byte](dataSize.toInt)
         in.readFully(dataOff, stored)
         val whole = decodeZstd(stored, e.compression, rawSize.toInt, itemSize)
-        if (z0 == 0 && z1 == e.size("Z") && y0 == 0 && y1 == ey) whole
+        if (z0 == 0 && z1 == e.size("Z") && y0 == 0 && y1 == ey && fullWidth) whole
         else {
-          val out = new Array[Byte]((z1 - z0) * cutBytes)
-          (z0 until z1).foreach(z => System.arraycopy(whole,
-            (z * ey + y0) * rowBytes, out, (z - z0) * cutBytes, cutBytes))
+          for (z <- z0 until z1; y <- y0 until y1) System.arraycopy(whole,
+            (z * ey + y) * rowBytes + colOff, out, (z - z0) * cutBytes + (y - y0) * cutRow, cutRow)
           out
         }
       case other =>

@@ -9,13 +9,15 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * Because the write chunk (128^3 default) is an exact multiple of the scale
   * factor (2^3 default), every downsample window lies entirely inside one
-  * chunk, so the reduction is a pure per-chunk map — ZERO shuffle. The only
-  * shuffle in the level chain is the follow-up rechunk from the shrunken
-  * grid (64^3) back to the write chunk (128^3), which moves each level's
-  * bytes once (level i+1 is 8x smaller, so the total over all levels is a
-  * geometric series ~1.14x of level 1). That shuffle is also the level
-  * boundary: `ZeissJob.writeStack` feeds each level straight from the
-  * previous level's in-memory chunks, one stage per level.
+  * chunk, so the reduction is a pure per-chunk map — ZERO shuffle. What can
+  * shuffle is the follow-up rechunk from the shrunken grid (64^3) back to
+  * the write chunk (128^3), which moves each level's bytes once (level i+1
+  * is 8x smaller, so the total over all levels is a geometric series
+  * ~1.14x of level 1). From a CZI source read in block-aligned boxes, the
+  * level-1 rechunk runs inside each task instead ([[levelInPartitions]]),
+  * so only levels 2 and up shuffle. Each shuffle is also a level boundary:
+  * `ZeissJob.writeStack` feeds each level straight from the previous
+  * level's in-memory chunks.
   *
   * Edge windows (array bound not divisible by the factor) average over the
   * voxels actually present, matching the ceil-division shape rule
@@ -39,11 +41,60 @@ object Downsample {
   }
 
   /** Downsample one chunk locally (pure). The chunk's grid coords are
-    * unchanged — it now lives on the shrunken-chunk grid. */
+    * unchanged — it now lives on the shrunken-chunk grid. Integer dtypes
+    * sum in `Long` and divide with truncation, which is exactly the
+    * truncated double mean (a window's sum stays far below 2^53, and a
+    * non-integral quotient of it lies at least 1/n from any integer);
+    * float dtypes keep the double mean in scan order. */
   def downsampleChunk(grid: ChunkGrid, factors: Seq[Int], chunk: ImageChunk): ImageChunk = {
     val dt = grid.dtype
     val (ez, ey, ex) = grid.extent(chunk.zi, chunk.yi, chunk.xi)
-    val (fz, fy, fx) = (factors(0), factors(1), factors(2))
+    val Seq(fz, fy, fx) = factors
+    val out =
+      if (dt == Dtype.UInt16 && fz == 2 && fy == 2 && fx == 2 &&
+          ez % 2 == 0 && ey % 2 == 0 && ex % 2 == 0) meanU16x2(chunk.data, ez, ey, ex)
+      else windowedMeans(dt, chunk.data, ez, ey, ex, fz, fy, fx)
+    ImageChunk(chunk.t, chunk.c, chunk.zi, chunk.yi, chunk.xi, out)
+  }
+
+  /** The 2x2x2 mean of a uint16 payload whose extents are all even (the
+    * default factors on any interior chunk): eight unsigned loads per
+    * output voxel, no per-voxel dispatch. */
+  private def meanU16x2(d: Array[Byte], ez: Int, ey: Int, ex: Int): Array[Byte] = {
+    val (oz, oy, ox) = (ez / 2, ey / 2, ex / 2)
+    val out = new Array[Byte](oz * oy * ox * 2)
+    val (row, plane) = (ex * 2, ey * ex * 2) // byte strides
+    var o = 0
+    var zo = 0
+    while (zo < oz) {
+      var yo = 0
+      while (yo < oy) {
+        var p = 2 * zo * plane + 2 * yo * row
+        val end = p + row
+        while (p < end) {
+          val q = p + row; val r = p + plane; val s = r + row
+          val sum =
+            (d(p) & 0xff) + ((d(p + 1) & 0xff) << 8) + (d(p + 2) & 0xff) + ((d(p + 3) & 0xff) << 8) +
+            (d(q) & 0xff) + ((d(q + 1) & 0xff) << 8) + (d(q + 2) & 0xff) + ((d(q + 3) & 0xff) << 8) +
+            (d(r) & 0xff) + ((d(r + 1) & 0xff) << 8) + (d(r + 2) & 0xff) + ((d(r + 3) & 0xff) << 8) +
+            (d(s) & 0xff) + ((d(s + 1) & 0xff) << 8) + (d(s + 2) & 0xff) + ((d(s + 3) & 0xff) << 8)
+          val mean = sum >>> 3
+          out(o) = mean.toByte
+          out(o + 1) = (mean >>> 8).toByte
+          o += 2
+          p += 4
+        }
+        yo += 1
+      }
+      zo += 1
+    }
+    out
+  }
+
+  /** Windowed means of any dtype, factors and (ragged) extents; edge
+    * windows average over the voxels present. */
+  private def windowedMeans(dt: Dtype, data: Array[Byte], ez: Int, ey: Int, ex: Int,
+      fz: Int, fy: Int, fx: Int): Array[Byte] = {
     val (oz, oy, ox) =
       (Grid.ceilDiv(ez, fz).toInt, Grid.ceilDiv(ey, fy).toInt, Grid.ceilDiv(ex, fx).toInt)
     val out = new Array[Byte](oz * oy * ox * dt.itemSize)
@@ -56,31 +107,45 @@ object Downsample {
         var xo = 0
         while (xo < ox) {
           val x0 = xo * fx; val x1 = math.min(x0 + fx, ex)
-          var sum = 0.0
-          var n = 0
-          var z = z0
-          while (z < z1) {
-            var y = y0
-            while (y < y1) {
-              var x = x0
-              val rowBase = (z * ey + y) * ex
-              while (x < x1) { sum += dt.read(chunk.data, rowBase + x); n += 1; x += 1 }
-              y += 1
+          val n = (z1 - z0) * (y1 - y0) * (x1 - x0)
+          val o = (zo * oy + yo) * ox + xo
+          if (dt.isInteger) {
+            var sum = 0L
+            var z = z0
+            while (z < z1) {
+              var y = y0
+              while (y < y1) {
+                val rowBase = (z * ey + y) * ex
+                var x = x0
+                while (x < x1) { sum += dt.readInt(data, rowBase + x); x += 1 }
+                y += 1
+              }
+              z += 1
             }
-            z += 1
+            // preserve_dtype: numpy astype truncates toward zero, as `/` does
+            dt.write(out, o, (sum / n).toDouble)
+          } else {
+            var sum = 0.0
+            var z = z0
+            while (z < z1) {
+              var y = y0
+              while (y < y1) {
+                val rowBase = (z * ey + y) * ex
+                var x = x0
+                while (x < x1) { sum += dt.read(data, rowBase + x); x += 1 }
+                y += 1
+              }
+              z += 1
+            }
+            dt.write(out, o, sum / n)
           }
-          val mean = sum / n
-          // preserve_dtype: numpy astype truncates toward zero for ints
-          dt.write(out, (zo * oy + yo) * ox + xo,
-            if (dt.isInteger) { if (mean >= 0) math.floor(mean) else math.ceil(mean) }
-            else mean)
           xo += 1
         }
         yo += 1
       }
       zo += 1
     }
-    ImageChunk(chunk.t, chunk.c, chunk.zi, chunk.yi, chunk.xi, out)
+    out
   }
 
   /** One full pyramid step: windowed mean then rechunk back to the write
@@ -96,8 +161,20 @@ object Downsample {
     val (inGrid, inDs) =
       if (aligned == grid.chunk) (grid, ds) else Rechunk(spark, ds, grid, aligned)
     val (shrunkGrid, shrunk) = windowedMean(spark, inDs, inGrid, factors)
-    Rechunk(spark, shrunk, shrunkGrid, writeChunk.zipWithIndex.map { case (c, i) =>
-      math.min(c.toLong, shrunkGrid.shape(2 + i)).toInt
-    })
+    Rechunk(spark, shrunk, shrunkGrid, clamped(writeChunk, shrunkGrid))
   }
+
+  /** [[level]] for factor-aligned input whose partitions each hold whole
+    * factor blocks of chunks ([[CziSource]]'s aligned boxes): the windowed
+    * mean and the rechunk back to the write chunk both run inside each
+    * partition, so the step adds no shuffle and no stage. */
+  def levelInPartitions(spark: SparkSession, ds: Dataset[ImageChunk], grid: ChunkGrid,
+      factors: Seq[Int], writeChunk: Seq[Int]): (ChunkGrid, Dataset[ImageChunk]) = {
+    val (shrunkGrid, shrunk) = windowedMean(spark, ds, grid, factors)
+    Rechunk.inPartitions(spark, shrunk, shrunkGrid, clamped(writeChunk, shrunkGrid))
+  }
+
+  /** The write chunk, clamped to the shrunk array's shape. */
+  private def clamped(writeChunk: Seq[Int], grid: ChunkGrid): Seq[Int] =
+    writeChunk.zipWithIndex.map { case (c, i) => math.min(c.toLong, grid.shape(2 + i)).toInt }
 }

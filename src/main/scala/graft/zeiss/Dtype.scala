@@ -21,6 +21,10 @@ sealed abstract class Dtype(
   /** Read element i of a little-endian C-order payload as Double. */
   def read(bytes: Array[Byte], i: Int): Double
 
+  /** Read element i of an integer dtype's payload exactly. */
+  def readInt(bytes: Array[Byte], i: Int): Int =
+    throw new UnsupportedOperationException(s"$zarrName is not an integer dtype")
+
   /** Write Double v into element i, truncating like numpy astype for ints. */
   def write(bytes: Array[Byte], i: Int, v: Double): Unit
 }
@@ -28,13 +32,15 @@ sealed abstract class Dtype(
 object Dtype {
   case object UInt8 extends Dtype("|u1", 1, true) {
     def minValue = 0; def maxValue = 255
-    def read(b: Array[Byte], i: Int): Double = (b(i) & 0xff).toDouble
+    override def readInt(b: Array[Byte], i: Int): Int = b(i) & 0xff
+    def read(b: Array[Byte], i: Int): Double = readInt(b, i).toDouble
     def write(b: Array[Byte], i: Int, v: Double): Unit = b(i) = v.toInt.toByte
   }
   case object UInt16 extends Dtype("<u2", 2, true) {
     def minValue = 0; def maxValue = 65535
-    def read(b: Array[Byte], i: Int): Double =
-      ((b(2 * i) & 0xff) | ((b(2 * i + 1) & 0xff) << 8)).toDouble
+    override def readInt(b: Array[Byte], i: Int): Int =
+      (b(2 * i) & 0xff) | ((b(2 * i + 1) & 0xff) << 8)
+    def read(b: Array[Byte], i: Int): Double = readInt(b, i).toDouble
     def write(b: Array[Byte], i: Int, v: Double): Unit = {
       val x = v.toInt
       b(2 * i) = (x & 0xff).toByte
@@ -43,8 +49,9 @@ object Dtype {
   }
   case object Int16 extends Dtype("<i2", 2, true) {
     def minValue = Short.MinValue; def maxValue = Short.MaxValue
-    def read(b: Array[Byte], i: Int): Double =
-      ((b(2 * i) & 0xff) | (b(2 * i + 1) << 8)).toShort.toDouble
+    override def readInt(b: Array[Byte], i: Int): Int =
+      ((b(2 * i) & 0xff) | (b(2 * i + 1) << 8)).toShort
+    def read(b: Array[Byte], i: Int): Double = readInt(b, i).toDouble
     def write(b: Array[Byte], i: Int, v: Double): Unit = {
       val x = v.toInt
       b(2 * i) = (x & 0xff).toByte
@@ -53,11 +60,12 @@ object Dtype {
   }
   case object Int32 extends Dtype("<i4", 4, true) {
     def minValue = Int.MinValue; def maxValue = Int.MaxValue
-    def read(b: Array[Byte], i: Int): Double = {
+    override def readInt(b: Array[Byte], i: Int): Int = {
       val o = 4 * i
-      ((b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) | ((b(o + 2) & 0xff) << 16) |
-        ((b(o + 3) & 0xff) << 24)).toDouble
+      (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) | ((b(o + 2) & 0xff) << 16) |
+        ((b(o + 3) & 0xff) << 24)
     }
+    def read(b: Array[Byte], i: Int): Double = readInt(b, i).toDouble
     def write(b: Array[Byte], i: Int, v: Double): Unit = {
       val x = v.toLong.toInt; val o = 4 * i
       b(o) = (x & 0xff).toByte; b(o + 1) = ((x >> 8) & 0xff).toByte

@@ -1,11 +1,16 @@
 package graft.zeiss
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The chunk-grid rechunk (SURVEY.md §2A op 13) — the one shuffle of the
-  * pipeline, run once per pyramid level. The reference's first rechunk, of
-  * the loaded stack (`compress/czi_to_zarr.py:447`), needs none here:
-  * [[CziSource]] assembles write-grid chunks where it reads them.
+  * pipeline, run once per pyramid level from level 2 on (and from level 1
+  * for the synthetic source, read-back levels and unaligned input). The
+  * reference's first rechunk, of the loaded stack
+  * (`compress/czi_to_zarr.py:447`), needs none here: [[CziSource]]
+  * assembles write-grid chunks where it reads them, and its block-aligned
+  * boxes let the level-1 rechunk run [[inPartitions]].
   *
   * Each source chunk is split into the fragments that fall into target-grid
   * chunks (narrow, local), fragments are shuffled BY TARGET CHUNK KEY, and
@@ -40,6 +45,47 @@ object Rechunk {
       }
     (dst, out)
   }
+
+  /** [[apply]] without the exchange, for input whose every partition holds
+    * all the source chunks of each target chunk it touches ([[CziSource]]'s
+    * block-aligned boxes on the way from level 0 to level 1). Fragments
+    * gather per target inside the partition, and each target chunk leaves
+    * as soon as its last fragment arrives, so the fragments in flight are
+    * about one block's. A partition that ends with a target still
+    * incomplete fails: its input was not aligned. */
+  def inPartitions(spark: SparkSession, ds: Dataset[ImageChunk], grid: ChunkGrid,
+      newChunk: Seq[Int]): (ChunkGrid, Dataset[ImageChunk]) = {
+    if (newChunk == grid.chunk) return (grid, ds)
+    import spark.implicits._
+    val src = grid
+    val dst = ChunkGrid(grid.shape, newChunk, grid.dtypeName)
+    val out = ds.mapPartitions { (it: Iterator[ImageChunk]) =>
+      val pending = mutable.HashMap.empty[(Int, Int, Int, Int, Int), mutable.ArrayBuffer[Fragment]]
+      it.flatMap(chunk => split(src, dst, chunk).flatMap { f =>
+        val key = (f.t, f.c, f.zi, f.yi, f.xi)
+        val frags = pending.getOrElseUpdate(key, mutable.ArrayBuffer.empty) += f
+        if (frags.size < sources(src, dst, f.zi, f.yi, f.xi)) Iterator.empty
+        else {
+          pending.remove(key)
+          Iterator.single(assemble(dst, f.t, f.c, f.zi, f.yi, f.xi, frags.iterator))
+        }
+      }) ++ { // by-name: runs once the partition is exhausted
+        if (pending.nonEmpty) throw new IllegalStateException(
+          s"target chunks ${pending.keys.take(3).mkString(", ")} miss source chunks " +
+            "in their partition: the input is not block-aligned")
+        Iterator.empty
+      }
+    }
+    (dst, out)
+  }
+
+  /** How many `src` chunks overlap target chunk (zi, yi, xi) of `dst`. */
+  private def sources(src: ChunkGrid, dst: ChunkGrid, zi: Int, yi: Int, xi: Int): Int =
+    Seq(zi, yi, xi).zipWithIndex.map { case (ti, a) =>
+      val lo = ti.toLong * dst.chunk(a)
+      val hi = math.min(src.shape(2 + a), lo + dst.chunk(a)) // exclusive
+      ((hi - 1) / src.chunk(a) - lo / src.chunk(a) + 1).toInt
+    }.product
 
   /** Splits one source chunk into target-grid fragments (pure, local). */
   def split(src: ChunkGrid, dst: ChunkGrid, chunk: ImageChunk): Iterator[Fragment] = {

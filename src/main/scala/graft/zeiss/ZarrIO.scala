@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.{AccumulatorV2, SerializableConfiguration}
 
@@ -26,6 +27,15 @@ object ZarrIO {
 
   private def fs(path: String, conf: Configuration): FileSystem =
     new Path(path).getFileSystem(conf)
+
+  /** A copy of the context's Hadoop conf, broadcast once for the tasks of
+    * one conversion, level write or level read. Captured in each task's
+    * closure instead, the conf (about a thousand properties, each with a
+    * gzipped source list) would be deserialized again by every task;
+    * Spark's file scans broadcast it for the same reason. */
+  def broadcastConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(
+      new SerializableConfiguration(new Configuration(spark.sparkContext.hadoopConfiguration)))
 
   def writeBytes(conf: Configuration, path: String, bytes: Array[Byte]): Unit = {
     val p = new Path(path)
@@ -119,18 +129,17 @@ object ZarrIO {
     * `counts` under (level, partition). */
   def writeThrough(spark: SparkSession, ds: Dataset[ImageChunk], grid: ChunkGrid,
       groupDir: String, level: Int, settings: ZeissJobSettings,
-      counts: LevelCounts): Dataset[ImageChunk] = {
+      counts: LevelCounts, conf: Broadcast[SerializableConfiguration]): Dataset[ImageChunk] = {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
     val levelDir = s"$groupDir/$level"
-    writeString(conf, s"$levelDir/.zarray", zarrayJson(grid, settings))
-    val sconf = new SerializableConfiguration(conf)
+    writeString(spark.sparkContext.hadoopConfiguration, s"$levelDir/.zarray",
+      zarrayJson(grid, settings))
     val itemSize = grid.dtype.itemSize
     val (clevel, doShuffle, compress) =
       (settings.compressorClevel, settings.compressorShuffle, settings.compressionEnabled)
     val g = grid
     ds.mapPartitions { (it: Iterator[ImageChunk]) =>
-      val c = sconf.value
+      val c = conf.value.value
       val Seq(cz, cy, cx) = g.chunk
       var n = 0L
       it.map { chunk =>
@@ -154,8 +163,17 @@ object ZarrIO {
     * last level of a pyramid, or a level written on its own). */
   def writeLevel(spark: SparkSession, ds: Dataset[ImageChunk], grid: ChunkGrid,
       groupDir: String, level: Int, settings: ZeissJobSettings): Long = {
+    val conf = broadcastConf(spark)
+    try writeLevel(spark, ds, grid, groupDir, level, settings, conf)
+    finally conf.destroy()
+  }
+
+  /** [[writeLevel]] with tasks writing through the broadcast `conf`. */
+  private[zeiss] def writeLevel(spark: SparkSession, ds: Dataset[ImageChunk], grid: ChunkGrid,
+      groupDir: String, level: Int, settings: ZeissJobSettings,
+      conf: Broadcast[SerializableConfiguration]): Long = {
     val counts = LevelCounts(spark, s"zarr-chunks-l$level")
-    writeThrough(spark, ds, grid, groupDir, level, settings, counts)
+    writeThrough(spark, ds, grid, groupDir, level, settings, counts, conf)
       .foreachPartition((it: Iterator[ImageChunk]) => it.foreach(_ => ()))
     counts.level(level)
   }
@@ -180,7 +198,7 @@ object ZarrIO {
       val c = new ObjectMapper().readTree(zarrayJson).get("compressor")
       c != null && !c.isNull
     }
-    val sconf = new SerializableConfiguration(conf)
+    val sconf = broadcastConf(spark)
     // chunk coordinates are derived from a range index on the executors —
     // never materialized on the driver (a 100TB level is tens of millions
     // of chunks; the driver holds only the grid geometry)
@@ -196,7 +214,7 @@ object ZarrIO {
         val zi = (r % nz).toInt; r /= nz
         val c = (r % nc).toInt; r /= nc
         val t = r.toInt
-        val raw = readBytes(sconf.value, s"$levelDir/$t/$c/$zi/$yi/$xi")
+        val raw = readBytes(sconf.value.value, s"$levelDir/$t/$c/$zi/$yi/$xi")
         val full = if (compressed) Blosc.decompress(raw) else raw
         // stored chunks are always full-size (zarr v2); restore the
         // engine's truncated edge-chunk working representation

@@ -13,7 +13,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * writes each level and reads it back before the next
   * (`czi_to_zarr.py:522-557`) so level-N graphs don't compound; here the
   * rechunk's shuffle boundary cuts the lineage instead, and voxel bytes
-  * never make the file round-trip.
+  * never make the file round-trip. A CZI source read in block-aligned
+  * boxes computes level 1 inside its read tasks, so its first shuffle is
+  * level 2's, over 1/64 of the array's bytes.
   *
   * The reference's static round-robin partitioning across SLURM nodes
   * (ops 3-4) dissolves inside one Spark app — the scheduler owns placement
@@ -111,8 +113,6 @@ object ZeissJob {
     }
     val srcGrid = ChunkGrid(shape, writeChunk,
       czi.map(_.dtype.zarrName).getOrElse(Dtype.UInt16.zarrName))
-    def level0Source() = czi.map(i => CziSource.chunkTable(spark, i, srcGrid))
-      .getOrElse(ChunkTable.synthetic(spark, srcGrid, seed))
 
     // levels actually producible: stop once the shape no longer shrinks
     // (every dim at 1 -> further levels would be identical 1-voxel copies;
@@ -122,6 +122,16 @@ object ZeissJob {
       lvl == 0 || Grid.levelShape(shape.drop(2), factors, lvl) !=
         Grid.levelShape(shape.drop(2), factors, lvl - 1)
     }.size
+
+    // A CZI source whose write chunks hold whole downsample windows is read
+    // in boxes of whole factor blocks: every level-1 chunk's sources then
+    // share one task, and the level 0->1 step runs inside it, unshuffled.
+    val fused = czi.isDefined && nLevels > 1 &&
+      writeChunk.zip(settings.scaleFactor).forall { case (c, f) => c % f == 0 }
+    val conf = ZarrIO.broadcastConf(spark)
+    def level0Source() = czi.map(i => CziSource.chunkTable(spark, i, srcGrid,
+        if (fused) settings.scaleFactor else Seq(1, 1, 1), conf))
+      .getOrElse(ChunkTable.synthetic(spark, srcGrid, seed))
 
     // optional op-15 stats pass: one extra scan of the (lazily regenerated)
     // source computes exact percentile display ranges before any write —
@@ -138,18 +148,20 @@ object ZeissJob {
 
     // Levels first..n-2 are written as they stream past on the way to the
     // next level's downsample; the last level's write is the one action.
-    // Each level adds one stage behind its rechunk shuffle.
+    // Each level adds one stage behind its rechunk shuffle, except a fused
+    // level 1, which stays in level 0's tasks.
     val counts = LevelCounts(spark, s"zarr-chunks-$imageName")
     def chain(first: Int, grid: ChunkGrid, ds: Dataset[ImageChunk]): Seq[Long] = {
       val (lastGrid, lastDs) = (first until nLevels - 1).foldLeft((grid, ds)) {
-        case ((g, d), lvl) => Downsample.level(spark,
-          ZarrIO.writeThrough(spark, d, g, groupDir, lvl, settings, counts), g,
-          settings.scaleFactor, settings.chunkSize)
+        case ((g, d), lvl) =>
+          val step = if (fused && lvl == 0) Downsample.levelInPartitions _ else Downsample.level _
+          step(spark, ZarrIO.writeThrough(spark, d, g, groupDir, lvl, settings, counts, conf), g,
+            settings.scaleFactor, settings.chunkSize)
       }
-      val last = ZarrIO.writeLevel(spark, lastDs, lastGrid, groupDir, nLevels - 1, settings)
+      val last = ZarrIO.writeLevel(spark, lastDs, lastGrid, groupDir, nLevels - 1, settings, conf)
       (first until nLevels - 1).map(counts.level) :+ last
     }
-    blockTargetMb match {
+    try blockTargetMb match {
       // For arrays far beyond cluster memory, blockTargetMb bounds in-flight
       // state by writing level 0 as grid-aligned super-blocks (op 19's
       // BlockedArrayWriter, zarr_writer.py:188-213: "reduce the scheduling
@@ -170,7 +182,7 @@ object ZeissJob {
               zi.toLong * cz >= z0 && zi.toLong * cz < z0 + zl &&
                 yi.toLong * cy >= y0 && yi.toLong * cy < y0 + yl &&
                 xi.toLong * cx >= x0 && xi.toLong * cx < x0 + xl)
-          ZarrIO.writeLevel(spark, sub, srcGrid, groupDir, 0, settings)
+          ZarrIO.writeLevel(spark, sub, srcGrid, groupDir, 0, settings, conf)
         }.sum
         if (nLevels == 1) Seq(level0)
         else {
@@ -179,7 +191,7 @@ object ZeissJob {
           level0 +: chain(1, g1, l1)
         }
       case _ => chain(0, srcGrid, level0Source())
-    }
+    } finally conf.destroy() // every job that reads it has run
   }
 
   /** `run_job` (`zeiss_job.py:222-241`). */

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Laws of the shuffle-free CZI ingest planner, checked from subblock
   * directory entries alone — no file, no Spark. They make "no plan sends
-  * corpus-sized input through one task" checkable on the image path. */
+  * corpus-sized input through one task" checkable on the image path, and
+  * "every level-1 chunk is computable inside one task" for block plans. */
 class CziPlanSpec extends AnyFunSuite {
 
   // Spark's defaults for spark.sql.files.{maxPartitionBytes,openCostInBytes}
@@ -24,17 +25,18 @@ class CziPlanSpec extends AnyFunSuite {
         CziReader.DimEntry("T", 0, 1, 1)))
 
   private def planFor(tilesY: Int, tilesX: Int, tile: Int, planes: Int, chunk: Int,
-      parallelism: Int): (ChunkGrid, Long, Seq[CziSource.Box]) = {
+      parallelism: Int, block: Seq[Int] = Seq(1, 1, 1)): (ChunkGrid, Long, Seq[CziSource.Box]) = {
     val grid = ChunkGrid(Seq(1L, 1L, planes.toLong, tilesY.toLong * tile, tilesX.toLong * tile),
       Seq(chunk, chunk, chunk), Dtype.UInt16.zarrName)
     val split = CziSource.splitBytes(grid.shape.product * 2, parallelism,
       MaxPartitionBytes, OpenCostInBytes)
     (grid, split, CziSource.plan(mosaic(tilesY, tilesX, tile, planes), Seq(0, 0, 7, 300, 500),
-      grid, split))
+      grid, split, block))
   }
 
   private def chunksOf(b: CziSource.Box): Seq[(Int, Int, Int, Int, Int)] =
-    for (yi <- b.yi0 until b.yi1; xi <- b.xi0 until b.xi1) yield (b.t, b.c, b.zi, yi, xi)
+    for (zi <- b.zi0 until b.zi1; yi <- b.yi0 until b.yi1; xi <- b.xi0 until b.xi1)
+      yield (b.t, b.c, zi, yi, xi)
 
   private def bytes(grid: ChunkGrid, b: CziSource.Box): Long =
     chunksOf(b).map { case (_, _, zi, yi, xi) => grid.chunkBytes(zi, yi, xi).toLong }.sum
@@ -47,7 +49,7 @@ class CziPlanSpec extends AnyFunSuite {
     assert(owned.distinct.size == owned.size, "a chunk owned twice")
     boxes.foreach { b =>
       assert(bytes(grid, b) <= split || (b.yi1 - b.yi0 == 1 && b.xi1 - b.xi0 == 1),
-        s"box (${b.zi}, ${b.yi0}-${b.yi1}, ${b.xi0}-${b.xi1}) over the $split-byte split")
+        s"box (${b.zi0}, ${b.yi0}-${b.yi1}, ${b.xi0}-${b.xi1}) over the $split-byte split")
     }
   }
 
@@ -62,6 +64,30 @@ class CziPlanSpec extends AnyFunSuite {
       assert(read == grid.shape.product * 2)
       // 8 Z slabs (the last 104 planes deep) x 32 one-row boxes
       assert(boxes.size == 8 * 32)
+    }
+  }
+
+  Seq(4, 32).foreach { dp =>
+    test(s"2048^2 tiles x 1000 planes in 2x2x2 blocks, defaultParallelism $dp: each " +
+        "level-1 chunk's sources in one box, boxes within max(split, one block)") {
+      val (grid, split, boxes) = planFor(2, 2, 2048, 1000, 128, dp, Seq(2, 2, 2))
+      // the level-1 grid the pyramid's first step writes: 64^3 windows of
+      // each level-0 chunk, rechunked to the write chunk clamped to its shape
+      val l1 = grid.downsampled(Seq(2, 2, 2), grid.chunk.zipWithIndex.map { case (c, i) =>
+        math.min(c.toLong, Grid.ceilDiv(grid.shape(2 + i), 2)).toInt })
+      val owners = boxes.zipWithIndex.flatMap { case (b, i) => chunksOf(b).map(_ -> i) }
+      assert(owners.size == grid.numChunks && owners.map(_._1).distinct.size == owners.size,
+        "chunks owned by more or fewer than one box")
+      val Seq(wz, wy, wx) = grid.chunk.map(_ / 2) // a level-0 chunk's windows
+      val byTarget = owners.groupBy { case ((t, c, zi, yi, xi), _) =>
+        (t, c, zi * wz / l1.chunk(0), yi * wy / l1.chunk(1), xi * wx / l1.chunk(2)) }
+      assert(byTarget.size == l1.numChunks)
+      byTarget.foreach { case (target, os) =>
+        assert(os.map(_._2).distinct.size == 1, s"level-1 chunk $target spans boxes")
+      }
+      val oneBlock = 8L * grid.chunkBytes(0, 0, 0)
+      boxes.foreach(b => assert(bytes(grid, b) <= math.max(split, oneBlock)))
+      assert(boxes.flatMap(_.pieces).map(_.readBytes(2)).sum == grid.shape.product * 2)
     }
   }
 

@@ -4,8 +4,9 @@ import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
 /** ScalaCheck property suites over the pure kernels (no SparkSession):
-  * Blosc round-trips, reshape laws, grid coverage, and rechunk
-  * split/assemble voxel preservation on arbitrary grids.
+  * Blosc round-trips and transposes, windowed means against their double
+  * reference, reshape laws, grid coverage, and rechunk split/assemble
+  * voxel preservation on arbitrary grids.
   */
 object BloscProps extends Properties("Blosc") {
 
@@ -22,6 +23,72 @@ object BloscProps extends Properties("Blosc") {
   property("compress.decompress == identity at any clevel") =
     forAll(payloads, Gen.choose(1, 9)) { case ((ts, data), lvl) =>
       Blosc.decompress(Blosc.compress(data, ts, lvl)).sameElements(data)
+    }
+
+  /** The c-blosc transpose for any typesize, one byte plane per pass. */
+  private def transpose(src: Array[Byte], ts: Int): Array[Byte] = {
+    val n = src.length / ts
+    val out = src.clone()
+    for (j <- 0 until ts; i <- 0 until n) out(j * n + i) = src(i * ts + j)
+    out
+  }
+
+  property("typesize-2 shuffle == the generic transpose, and unshuffle inverts it") =
+    forAll(payloads.map(_._2)) { data =>
+      val shuffled = Blosc.shuffle(data, 2)
+      shuffled.sameElements(transpose(data, 2)) &&
+        Blosc.unshuffle(shuffled, 2).sameElements(data)
+    }
+}
+
+object DownsampleProps extends Properties("Downsample") {
+
+  /** The windowed mean as a double sum, truncated toward zero for
+    * integer dtypes: the oracle every kernel must equal byte for byte. */
+  private def reference(dt: Dtype, data: Array[Byte], ez: Int, ey: Int, ex: Int,
+      f: Seq[Int]): Array[Byte] = {
+    val (oz, oy, ox) = ((ez + f(0) - 1) / f(0), (ey + f(1) - 1) / f(1), (ex + f(2) - 1) / f(2))
+    val out = new Array[Byte](oz * oy * ox * dt.itemSize)
+    for (zo <- 0 until oz; yo <- 0 until oy; xo <- 0 until ox) {
+      var sum = 0.0
+      var n = 0
+      for (z <- zo * f(0) until math.min(ez, zo * f(0) + f(0));
+           y <- yo * f(1) until math.min(ey, yo * f(1) + f(1));
+           x <- xo * f(2) until math.min(ex, xo * f(2) + f(2))) {
+        sum += dt.read(data, (z * ey + y) * ex + x)
+        n += 1
+      }
+      val mean = sum / n
+      dt.write(out, (zo * oy + yo) * ox + xo,
+        if (dt.isInteger) { if (mean >= 0) math.floor(mean) else math.ceil(mean) } else mean)
+    }
+    out
+  }
+
+  private def payload(dt: Dtype, ez: Int, ey: Int, ex: Int): Gen[Array[Byte]] =
+    Gen.containerOfN[Array, Byte](ez * ey * ex * dt.itemSize,
+      Gen.chooseNum(Byte.MinValue, Byte.MaxValue))
+
+  // any dtype, ragged extents, factors 1-3
+  private val general = for {
+    dt <- Gen.oneOf(Dtype.all)
+    ext <- Gen.listOfN(3, Gen.choose(1, 9))
+    f <- Gen.listOfN(3, Gen.choose(1, 3))
+    data <- payload(dt, ext(0), ext(1), ext(2))
+  } yield (dt, ext, f, data)
+
+  // the dedicated uint16 2x2x2 loop: even extents
+  private val u16x2 = for {
+    ext <- Gen.listOfN(3, Gen.choose(1, 6).map(_ * 2))
+    data <- payload(Dtype.UInt16, ext(0), ext(1), ext(2))
+  } yield (Dtype.UInt16: Dtype, ext, Seq(2, 2, 2), data)
+
+  property("downsampleChunk == the double-mean reference, byte for byte") =
+    forAll(Gen.oneOf(general, u16x2)) { case (dt, ext, f, data) =>
+      val Seq(ez, ey, ex) = ext
+      val grid = ChunkGrid(Seq(1L, 1L, ez.toLong, ey.toLong, ex.toLong), ext, dt.zarrName)
+      Downsample.downsampleChunk(grid, f, ImageChunk(0, 0, 0, 0, 0, data)).data
+        .sameElements(reference(dt, data, ez, ey, ex, f))
     }
 }
 

@@ -93,8 +93,8 @@ class LevelChainSpec extends AnyFunSuite {
 
   /** A CZI fixture converted by `writeStack` against the reference, once
     * with the default box split and once with boxes cut down to single
-    * chunk rows and chunks, so Y- and X-split boxes and partial subblock
-    * reads are all covered. */
+    * blocks (single chunks where the level-1 step is not fused), so Y- and
+    * X-split boxes and partial subblock reads are all covered. */
   private def assertCziIdentity(name: String, blocks: Seq[CziFixture.Block],
       seed: Long, chunk: Seq[Int], levels: Int): Unit = {
     val path = s"${tempDir("graft-chain-czi")}/$name.czi"
@@ -126,6 +126,72 @@ class LevelChainSpec extends AnyFunSuite {
     assertCziIdentity("zstd1", CziFixture.zstd1(33L, hiLo = true), 33L, Seq(2, 4, 4), 2)
   }
 
+  test("CZI with odd chunk counts per axis: one block per box, the chain writes the reference bytes") {
+    // 4x32x48 on (4, 12, 10) chunks: 1 x 3 x 5 chunks, so the last 2x2x2
+    // block along Y and X is cut short by the array's end
+    assertCziIdentity("mosaic-odd", CziFixture.mosaic(5L), 5L, Seq(4, 12, 10), 3)
+    val grid = ChunkGrid(Seq(1L, 1L, 4L, 32L, 48L), Seq(4, 12, 10), Dtype.UInt16.zarrName)
+    val boxes = CziSource.plan(CziFixture.mosaic(5L).map(b =>
+      CziReader.SubblockEntry(CziReader.PixelGray16, 0L, 0, b.dims)), Seq(0, 0, 10, 200, 100),
+      grid, split = 1L, block = Seq(2, 2, 2))
+    assert(boxes.map(b => (b.zi0, b.zi1, b.yi0, b.yi1, b.xi0, b.xi1)).toSet ==
+      (for (yb <- 0 until 2; xb <- 0 until 3)
+        yield (0, 1, 2 * yb, math.min(3, 2 * yb + 2), 2 * xb, math.min(5, 2 * xb + 2))).toSet)
+  }
+
+  /** Stages that wrote shuffle output, of the jobs `body` runs. A marker
+    * job after `body` drains the listener queue: its end arrives after
+    * every earlier event. */
+  private def shuffleStages(spark: SparkSession)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"level-chain-${System.nanoTime()}"
+    val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      private def groupOf(p: java.util.Properties) =
+        Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (groupOf(e.properties) == group) mine.add(e.stageInfo.stageId)
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (mine.contains(e.stageInfo.stageId) &&
+            e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten > 0)
+          stages.incrementAndGet()
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (groupOf(e.properties) == s"$group-marker") markerJob.set(e.jobId)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "level chain")
+      body
+      sc.setJobGroup(s"$group-marker", "listener drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never drained")
+      stages.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("the level-1 step of a block-aligned CZI source runs no shuffle") {
+    val spark = TestSpark.spark
+    val path = s"${tempDir("graft-chain-czi")}/fused.czi"
+    CziFixture.write(path, CziFixture.mosaic(9L))
+    def convert(chunk: Seq[Int]): Int = shuffleStages(spark) {
+      ZeissJob.writeStack(spark, settings(tempDir("graft-chain-fused"), chunk, 2), path)
+    }
+    // 2-chunk-deep Z chunks hold whole windows: level 0 -> 1 inside each task
+    assert(convert(Seq(2, 16, 16)) == 0)
+    // 3-deep ones do not: the step aligns and rechunks through shuffles
+    assert(convert(Seq(3, 16, 16)) > 0)
+  }
+
   test("LevelCounts: a duplicate attempt's report is counted once") {
     val driver = new LevelCounts
     def attempt(reports: ((Int, Int), Long)*): LevelCounts = {
@@ -145,7 +211,7 @@ class LevelChainSpec extends AnyFunSuite {
     val grid = ChunkGrid(Seq(1L, 1L, 16L, 16L, 24L), Seq(8, 8, 8), Dtype.UInt16.zarrName)
     val counts = LevelCounts(spark, "rerun")
     val written = ZarrIO.writeThrough(spark, ChunkTable.synthetic(spark, grid, 5L),
-      grid, out, 0, settings(out, grid.chunk, 1), counts).rdd
+      grid, out, 0, settings(out, grid.chunk, 1), counts, ZarrIO.broadcastConf(spark)).rdd
     // two actions run every write task twice — a LongAccumulator would
     // report 2 x 12 chunks
     written.count()
